@@ -12,6 +12,7 @@ cited throughout as tesserocr/tesserocr.pyx:line.
 
 __version__ = "0.1.0"
 
+from . import _zipcache
 from .config import DEFAULT_CONFIG, ExtractorConfig, read_config_file
 from .constants import DIR, OEM, PSM, PT, RIL, Justification, LeptLogLevel, Orientation
 
@@ -30,6 +31,11 @@ __all__ = [
     "read_config_file",
     "set_leptonica_log_level",
 ]
+
+# every Spark Python worker imports this package root when it unpickles an
+# engine UDF: stop its per-task importlib.invalidate_caches() from
+# re-reading pyspark.zip (see _zipcache)
+_zipcache.install()
 
 
 def tesseract_version() -> str:

@@ -11,6 +11,10 @@ classifier score).
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+from string import ascii_letters
+
 #: Unicode block ranges -> script name (coarse, deterministic).
 _RANGES: list[tuple[int, int, str]] = [
     (0x0041, 0x024F, "Latin"),
@@ -38,7 +42,9 @@ def classify_char(ch: str) -> str | None:
     return "Latin" if cp < 0x0250 else None
 
 
-_ASCII_ALPHA_RE = None
+_ASCII_ALPHA_RE = re.compile(r"[A-Za-z]")
+_NON_ASCII_RE = re.compile(r"[^\x00-\x7f]")
+_ASCII_LETTERS = ascii_letters.encode()
 
 
 def detect_os(text: str, lang: str = "eng") -> dict:
@@ -49,24 +55,23 @@ def detect_os(text: str, lang: str = "eng") -> dict:
     if text.isascii():
         # fast path: pure-ASCII text is all-Latin by construction; only
         # letter PRESENCE matters, so search (first-hit exit) not findall
-        global _ASCII_ALPHA_RE
-        if _ASCII_ALPHA_RE is None:
-            import re
-
-            _ASCII_ALPHA_RE = re.compile(r"[A-Za-z]")
         if _ASCII_ALPHA_RE.search(text) is None:
             fallback = _LANG_SCRIPT.get(lang.split("+")[0], "Latin")
             return {"orient_deg": 0, "orient_conf": 0.0,
                     "script_name": fallback, "script_conf": 0.0}
         return {"orient_deg": 0, "orient_conf": 100.0,
                 "script_name": "Latin", "script_conf": 100.0}
-    counts: dict[str, int] = {}
-    total = 0
-    for ch in text:
+    # same counts as classify_char over every character: the ASCII letters
+    # are exactly the ASCII characters it calls Latin, counted in C; each
+    # distinct non-ASCII character is classified once
+    ascii_part = text.encode("ascii", "ignore")
+    total = len(ascii_part) - len(ascii_part.translate(None, _ASCII_LETTERS))
+    counts = {"Latin": total} if total else {}
+    for ch, n in Counter(_NON_ASCII_RE.findall(text)).items():
         s = classify_char(ch)
         if s is not None:
-            counts[s] = counts.get(s, 0) + 1
-            total += 1
+            counts[s] = counts.get(s, 0) + n
+            total += n
     if total == 0:
         fallback = _LANG_SCRIPT.get(lang.split("+")[0], "Latin")
         return {"orient_deg": 0, "orient_conf": 0.0,

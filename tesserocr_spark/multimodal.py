@@ -636,7 +636,8 @@ def _lzw_decode(
     the output exceeds it — LZW expands up to ~750x, so an unbounded
     decode of a crafted multi-MB stream could build GB-scale buffers
     before the caller's length check rejects them."""
-    if not 2 <= min_code_size <= 11:  # GIF89a legal range (width caps at 12)
+    # GIF89a legal range: pixel indices are bytes, so literals stop at 2^8
+    if not 2 <= min_code_size <= 8:
         return None
     clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
     literals = _lzw_literals(min_code_size)

@@ -31,8 +31,6 @@ Scale design (the 100 TB contract):
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -658,7 +656,8 @@ def connected_components(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
     Beyond", SoCC'14 — public algorithm, re-expressed as DataFrame ops).
 
     ``edges``: (src, dst) undirected pairs, any orientation. Returns
-    (node, label) where label = the component's minimum node id.
+    (node, label) where label = the component's minimum node id. Raises
+    RuntimeError if the edges do not reach a fixpoint in ``max_rounds``.
 
     Each round is two hash-aggregate+join passes over the edge list — no
     per-node neighbor materialization (no collect_list; hot nodes stay
@@ -683,7 +682,6 @@ def connected_components(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
         # one job instead of an eager checkpoint job plus a count job
     )
     n_e = E.count()
-    converged = False
     for _ in range(max_rounds):
         # large-star: for every node a, m = min(neighborhood ∪ {a});
         # re-parent each strictly larger neighbor b to m
@@ -718,17 +716,15 @@ def connected_components(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
             E, ["u", "v"], "left_anti"
         ).limit(1).count() == 0:
             E = small
-            converged = True
             break
         E = small
         n_e = n_s
-    if not converged:
-        # would return partially-contracted edges — fail loudly (ADVICE r01)
-        warnings.warn(
+    else:
+        # partially-contracted edges would split components: no answer
+        # rather than a silently wrong one
+        raise RuntimeError(
             f"connected_components: star contraction not converged after "
-            f"{max_rounds} rounds; labels may be split",
-            RuntimeWarning,
-            stacklevel=2,
+            f"{max_rounds} rounds"
         )
     return (
         E.select(F.col("u").alias("node"), F.col("v").alias("label"))

@@ -3,6 +3,7 @@ LSH ANN achieves high recall vs brute force, multimodal plumbing works."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -877,15 +878,12 @@ class TestCCClusters:
         cap on a diameter-400 path (plain propagation would need 400 rounds)
         and must agree with union-find ground truth on a random graph."""
         import random
-        import warnings
 
         from tesserocr_spark.queries.dedup import connected_components
 
         def labels_of(edges_py):
             df = spark.createDataFrame(edges_py, "src long, dst long")
-            with warnings.catch_warnings():
-                warnings.simplefilter("error")  # non-convergence = failure
-                return {r.node: r.label for r in connected_components(df).collect()}
+            return {r.node: r.label for r in connected_components(df).collect()}
 
         lab = labels_of([(i, i + 1) for i in range(400)])
         assert set(lab.values()) == {0} and len(lab) == 401
@@ -906,6 +904,15 @@ class TestCCClusters:
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
         assert labels_of(e) == {n: find(n) for ab in e for n in ab}
+
+    def test_round_cap_raises_instead_of_split_labels(self, spark):
+        """The diameter-400 path needs more than one round: hitting the cap
+        is an error, not partially contracted labels."""
+        from tesserocr_spark.queries.dedup import connected_components
+
+        df = spark.createDataFrame([(i, i + 1) for i in range(400)], "src long, dst long")
+        with pytest.raises(RuntimeError, match="not converged after 1 rounds"):
+            connected_components(df, max_rounds=1)
 
     def test_planted_pairs_cluster_to_min_id(self, spark):
         from tesserocr_spark.queries.dedup import (

@@ -145,6 +145,47 @@ def test_fold_separator_law(html, line_sep, para_sep):
     assert strip(custom, (line_sep, para_sep)) == strip(d.text, ("\n", "\n"))
 
 
+def _detect_os_per_char(text: str, lang: str) -> dict:
+    """detect_os as one classify_char call per character — the law the
+    counting shortcuts must reproduce."""
+    from tesserocr_spark.core.osd import _LANG_SCRIPT, classify_char
+
+    counts: dict[str, int] = {}
+    for ch in text:
+        s = classify_char(ch)
+        if s is not None:
+            counts[s] = counts.get(s, 0) + 1
+    total = sum(counts.values())
+    if total == 0:
+        return {"orient_deg": 0, "orient_conf": 0.0,
+                "script_name": _LANG_SCRIPT.get(lang.split("+")[0], "Latin"),
+                "script_conf": 0.0}
+    script = max(sorted(counts), key=lambda k: counts[k])
+    return {"orient_deg": 0, "orient_conf": 100.0, "script_name": script,
+            "script_conf": round(100.0 * counts[script] / total, 4)}
+
+
+osd_chars = st.one_of(
+    st.characters(blacklist_categories=()),  # any code point
+    st.characters(min_codepoint=0xD800, max_codepoint=0xDFFF,
+                  blacklist_categories=()),  # lone surrogates
+    st.characters(min_codepoint=0x4E00, max_codepoint=0x9FFF),  # Han
+    st.characters(min_codepoint=0x3040, max_codepoint=0x30FF),  # kana
+    st.characters(max_codepoint=0x7F),
+    # NBSP / ideographic-space glue and script-range boundaries
+    st.sampled_from("\u00a0\u3000\u0400\u00e9\u024f\u0250\u1100\u00df"),
+)
+
+
+@given(st.text(alphabet=osd_chars, max_size=60),
+       st.sampled_from(["eng", "rus", "chi_sim+eng", "zzz"]))
+@settings(max_examples=300, deadline=None)
+def test_detect_os_equals_per_char_classification(text, lang):
+    from tesserocr_spark.core import detect_os
+
+    assert detect_os(text, lang) == _detect_os_per_char(text, lang)
+
+
 class TestContainerParserProperties:
     """Build → parse roundtrip laws for the real BMP/WAV parsers."""
 
