@@ -20,10 +20,13 @@ Usage: python scripts/update_oracle_laws.py [--check] [--round N] [--migrate]
              oracle (verify with scripts/check_oracles.py before/after) —
              the laws are unchanged, only how they are hashed. Used r05 for
              the per-module -> per-function-closure granularity change.
+Any other argument (including --help) prints this usage and exits 2
+without writing.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import sys
 from pathlib import Path
@@ -33,17 +36,33 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from tesserocr_spark.queries import freshness  # noqa: E402
 
 
-def main() -> int:
-    check_only = "--check" in sys.argv
+class _StrictParser(argparse.ArgumentParser):
+    """Exits 2 with the module usage on any unrecognised argument (there is
+    no --help option), so a typo can never fall through to the rewrite."""
+
+    def error(self, message: str):
+        self.exit(2, f"{__doc__}\nerror: {message}\n")
+
+
+def parse_args(argv: list[str]) -> argparse.Namespace:
+    parser = _StrictParser(prog="update_oracle_laws.py", add_help=False,
+                           allow_abbrev=False)
+    parser.add_argument("--check", action="store_true")
+    parser.add_argument("--round", type=int)
+    parser.add_argument("--migrate", action="store_true")
+    return parser.parse_args(argv)
+
+
+def main(argv: list[str] | None = None) -> int:
+    args = parse_args(sys.argv[1:] if argv is None else argv)
+    check_only = args.check
     root = freshness.repo_root()
     path = root / "ORACLE_LAWS.json"
     laws = freshness.load_laws(root)
     shas = freshness.current_shas()
-    now = freshness.current_round(root)
-    if "--round" in sys.argv:
-        now = int(sys.argv[sys.argv.index("--round") + 1])
+    now = freshness.current_round(root) if args.round is None else args.round
 
-    migrate = "--migrate" in sys.argv
+    migrate = args.migrate
     changed, out = [], {}
     for key in sorted(shas):
         rec = laws.get(key)

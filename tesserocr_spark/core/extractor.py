@@ -80,16 +80,19 @@ def word_flags(word: str, base: int) -> int:
 _WATTR_CACHE: dict[str, tuple] = {}
 _WATTR_CACHE_MAX = 1 << 17
 
+#: span counts of a document with no spans (see ``Extractor._emit``)
+_NO_SPANS = (0, 0, 0, 0, 0, 0)
+
 
 def _word_attrs(word: str) -> tuple:
-    ent = _WATTR_CACHE.get(word)
-    if ent is None:
-        if len(_WATTR_CACHE) >= _WATTR_CACHE_MAX:
-            _WATTR_CACHE.clear()
-        # delegate to the public frozen-law functions so a lockstep change
-        # there can never drift from the hot path (misses are cold)
-        ent = (word_conf(word), word_flags(word, 0))
-        _WATTR_CACHE[word] = ent
+    """Insert and return the ``_WATTR_CACHE`` entry of ``word`` (the miss
+    path: ``_emit`` looks hits up inline)."""
+    if len(_WATTR_CACHE) >= _WATTR_CACHE_MAX:
+        _WATTR_CACHE.clear()
+    # delegate to the public frozen-law functions so a lockstep change
+    # there can never drift from the hot path (misses are cold)
+    ent = (word_conf(word), word_flags(word, 0))
+    _WATTR_CACHE[word] = ent
     return ent
 
 
@@ -193,12 +196,12 @@ class Extractor:
 
         if psm == PSM.OSD_ONLY:
             osd = detect_os(_all_text(blocks), self.config.lang)
-            return ExtractedDoc("", [], osd, self._metrics(html_bytes, [], truncated))
+            return ExtractedDoc("", [], osd, self._metrics(html_bytes, _NO_SPANS, truncated))
 
         layout_only = psm == PSM.AUTO_ONLY
-        spans, doc_text = self._emit(blocks, layout_only, region)
+        spans, doc_text, counts = self._emit(blocks, layout_only, region)
         osd = detect_os(doc_text if not layout_only else _all_text(blocks), self.config.lang)
-        return ExtractedDoc(doc_text, spans, osd, self._metrics(html_bytes, spans, truncated))
+        return ExtractedDoc(doc_text, spans, osd, self._metrics(html_bytes, counts, truncated))
 
     def extract_text(self, html: bytes | str | None) -> str:
         """Text-only fast path (the ``image_to_text`` one-shot helper,
@@ -373,12 +376,15 @@ class Extractor:
         blocks: list[Block],
         layout_only: bool,
         region: tuple[int, int, int, int] | None,
-    ) -> tuple[list[tuple], str]:
+    ) -> tuple[list[tuple], str, tuple]:
         """Assign reading-order ids + char-grid geometry; build spans & text.
 
         Post-_resolve invariant: every text block has >=1 para, every para
         >=1 line, every line >=1 word — so within-parent ids are direct
         enumeration indices (content-derived, partition-independent).
+
+        Also returns the span counts ``(blocks, paras, lines, words,
+        symbols, boilerplate blocks)`` that ``_metrics`` reports.
         """
         blocks = self._resolve(blocks)
         if region is not None:
@@ -390,27 +396,32 @@ class Extractor:
         para_renders: list[str] = []
         y = 0
         block_id = -1
+        n_paras = n_lines = n_words = n_symbols = n_boiler = 0
         emit_syms = self._emit_symbols and not layout_only
-        word_attrs = _word_attrs
+        wattrs = _WATTR_CACHE
         RWORD, RSYM, RLINE, RPARA, RBLOCK = (
             RIL.WORD, RIL.SYMBOL, RIL.TEXTLINE, RIL.PARA, RIL.BLOCK)
 
         for blk in blocks:
             bt = blk.block_type
+            block_id += 1
             if blk.is_image:
                 # non-text block: one imaginary para/line/word, no symbols
                 # (Next() semantics, tesserocr/tesserocr.pyx:501-508)
-                block_id += 1
                 bb = (0, y, 0, y + 1)
                 append((RBLOCK, block_id, -1, -1, -1, -1, bt, None, 0.0, 0, bb, 0))
                 append((RPARA, block_id, 0, -1, -1, -1, bt, None, 0.0, 0, bb, 0))
                 append((RLINE, block_id, 0, 0, -1, -1, bt, None, 0.0, 0, bb, 0))
                 append((RWORD, block_id, 0, 0, 0, -1, bt, None, 0.0, 0, bb, 0))
+                n_paras += 1
+                n_lines += 1
+                n_words += 1
                 y += 1
                 continue
 
-            block_id += 1
             boiler_flag = FLAG_BOILERPLATE if blk.boiler else 0
+            if boiler_flag:
+                n_boiler += 1
             block_conf_sum = 0.0
             block_nw = 0
             block_y0 = y
@@ -418,6 +429,7 @@ class Extractor:
             block_parts: list[str] = []
             bpos = len(spans)
             append(None)  # BLOCK placeholder, filled after children
+            n_paras += len(blk.paras)
             for para_id, para in enumerate(blk.paras):
                 para_conf_sum = 0.0
                 para_nw = 0
@@ -426,24 +438,23 @@ class Extractor:
                 ppos = len(spans)
                 append(None)  # PARA placeholder
                 para_lines: list[str] = []
+                n_lines += len(para)
                 for line_id, line in enumerate(para):
-                    col = 0
+                    y1 = y + 1
+                    col = -1
                     line_conf_sum = 0.0
-                    parts: list[str] = []
                     lpos = len(spans)
                     append(None)  # LINE placeholder
                     for word_id, (wtext, wflags, wchar_flags) in enumerate(line):
-                        blanks = 0 if word_id == 0 else 1
-                        col += blanks
-                        x0 = col
-                        x1c = col + len(wtext)
-                        col = x1c
-                        cf, cbits = word_attrs(wtext)
-                        fl = cbits | wflags | boiler_flag
+                        x0 = col + 1  # one blank before every word but the first
+                        col = x0 + len(wtext)
+                        ent = wattrs.get(wtext) or _word_attrs(wtext)
+                        cf = ent[0]
+                        fl = ent[1] | wflags | boiler_flag
                         append((
                             RWORD, block_id, para_id, line_id, word_id, -1, bt,
-                            None if layout_only else wtext, cf, blanks,
-                            (x0, y, x1c, y + 1), fl))
+                            None if layout_only else wtext, cf,
+                            1 if word_id else 0, (x0, y, col, y1), fl))
                         line_conf_sum += cf
                         if emit_syms:
                             base = fl & ~STYLE_MASK
@@ -453,32 +464,34 @@ class Extractor:
                                 append((
                                     RSYM, block_id, para_id, line_id, word_id,
                                     si, bt, ch, cf, 0,
-                                    (x0 + si, y, x0 + si + 1, y + 1),
+                                    (x0 + si, y, x0 + si + 1, y1),
                                     base | (wchar_flags[si] & STYLE_MASK)))
-                        parts.append(wtext)
                     nw = len(line)
-                    ltext = " ".join(parts)
+                    n_words += nw
+                    ltext = " ".join([w[0] for w in line])
+                    if emit_syms:
+                        n_symbols += len(ltext) - nw + 1
                     spans[lpos] = (
                         RLINE, block_id, para_id, line_id, -1, -1, bt,
                         None if layout_only else ltext, line_conf_sum / nw, 0,
-                        (0, y, len(ltext), y + 1), boiler_flag)
+                        (0, y, len(ltext), y1), boiler_flag)
                     para_conf_sum += line_conf_sum
                     para_nw += nw
                     para_lines.append(ltext)
                     if len(ltext) > px1:
                         px1 = len(ltext)
-                    y += 1
-                ptext = "\n".join(para_lines)
+                    y = y1
+                ptext = "\n".join(para_lines) + "\n"
                 spans[ppos] = (
                     RPARA, block_id, para_id, -1, -1, -1, bt,
-                    None if layout_only else ptext + "\n", para_conf_sum / para_nw,
+                    None if layout_only else ptext, para_conf_sum / para_nw,
                     0, (0, py0, px1, y), boiler_flag)
                 block_conf_sum += para_conf_sum
                 block_nw += para_nw
-                block_parts.append(ptext + "\n")
-                para_renders.append(ptext + "\n")
+                block_parts.append(ptext)
                 if px1 > block_x1:
                     block_x1 = px1
+            para_renders += block_parts
             spans[bpos] = (
                 RBLOCK, block_id, -1, -1, -1, -1, bt,
                 None if layout_only else "".join(block_parts),
@@ -486,24 +499,19 @@ class Extractor:
                 (0, block_y0, block_x1, y), boiler_flag)
 
         doc_text = "" if layout_only else "\n".join(para_renders)
-        return spans, doc_text
+        counts = (block_id + 1, n_paras, n_lines, n_words, n_symbols, n_boiler)
+        return spans, doc_text, counts
 
-    def _metrics(self, html_bytes: int, spans: list[tuple], truncated: bool) -> dict:
-        n = {RIL.BLOCK: 0, RIL.PARA: 0, RIL.TEXTLINE: 0, RIL.WORD: 0, RIL.SYMBOL: 0}
-        boiler = 0
-        for s in spans:  # raw positional spans: s[0]=level, s[11]=flags
-            lvl = s[0]
-            n[lvl] += 1
-            if lvl == RIL.BLOCK and s[11] & FLAG_BOILERPLATE:
-                boiler += 1
+    def _metrics(self, html_bytes: int, counts: tuple, truncated: bool) -> dict:
+        n_blocks, n_paras, n_lines, n_words, n_symbols, n_boiler = counts
         return {
             "html_bytes": html_bytes,
-            "n_blocks": n[RIL.BLOCK],
-            "n_paras": n[RIL.PARA],
-            "n_lines": n[RIL.TEXTLINE],
-            "n_words": n[RIL.WORD],
-            "n_symbols": n[RIL.SYMBOL],
-            "n_boiler_blocks": boiler,
+            "n_blocks": n_blocks,
+            "n_paras": n_paras,
+            "n_lines": n_lines,
+            "n_words": n_words,
+            "n_symbols": n_symbols,
+            "n_boiler_blocks": n_boiler,
             "scale_factor": 1,  # GetThresholdedImageScaleFactor analogue
             "truncated": truncated,
         }

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import re
 from html.parser import HTMLParser
+from itertools import islice
 
 from ..constants import BLOCK_TAGS, BOILERPLATE_TAGS, PT, TAG_TO_PT
 from .tokenizer import fast_feed
@@ -34,6 +35,33 @@ REGION_TAGS = frozenset(
 #: void/self-closing tags that never hold text.
 _VOID_TAGS = frozenset("br img hr meta link input area base col embed source track wbr".split())
 
+#: tag kind bits of the segmenter's behaviour table
+_VOID, _BLOCK, _REGION, _BOILER = 1, 2, 4, 8
+#: inline depth slots: a link counter, then one counter per style bit
+#: (1=sup, 2=sub, 64=bold, 128=italic, 256=monospace)
+_LINK_SLOT = 0
+_SLOT_TAGS = (("a",), ("sup",), ("sub",), ("b", "strong"), ("i", "em"),
+              ("code", "tt", "pre", "kbd", "samp"))
+_SLOT_STYLE = (0, 1, 2, 64, 128, 256)
+_NO_SLOT = -1
+
+
+def _tag_table() -> dict[str, tuple[int, int]]:
+    """tag -> (kind bits, depth slot): every tag the segmenter treats
+    specially, so each start/end event costs one dict lookup."""
+    slots = {t: i for i, tags in enumerate(_SLOT_TAGS) for t in tags}
+    table = {}
+    for tag in _VOID_TAGS | BLOCK_TAGS | REGION_TAGS | BOILERPLATE_TAGS | slots.keys():
+        kind = ((_VOID if tag in _VOID_TAGS else 0) | (_BLOCK if tag in BLOCK_TAGS else 0)
+                | (_REGION if tag in REGION_TAGS else 0)
+                | (_BOILER if tag in BOILERPLATE_TAGS else 0))
+        table[tag] = (kind, slots.get(tag, _NO_SLOT))
+    return table
+
+
+_TAG_TABLE = _tag_table()
+_PLAIN_TAG = (0, _NO_SLOT)
+
 #: FROZEN whitespace law: word separators are the FIVE chars of the
 #: Java-regex ∩ RE2 ``\s`` intersection — space \t \n \r \f. RE2 (the
 #: DuckDB oracle dialect) does NOT count \v as ``\s`` while Java does, so
@@ -44,9 +72,7 @@ _VOID_TAGS = frozenset("br img hr meta link input area base col embed source tra
 #: codepoints are all word characters, not separators (r04 edge-oracle
 #: finding, tests/test_edge_oracles.py rows 9012/9015).
 _ASCII_WS = " \t\n\r\f"
-_WS_SET = frozenset(_ASCII_WS)
 _WS_SPLIT_RE = re.compile(r"[ \t\n\r\f]+")
-_NONWS_RE = re.compile(r"[^ \t\n\r\f]")
 
 #: sentinel style marking an explicit <br> fragment (data that merely
 #: *contains* a newline is ordinary whitespace, not a line break)
@@ -74,6 +100,15 @@ def _zeros(n: int) -> tuple:
     return t
 
 
+def _cache_word(w: str) -> tuple:
+    """Insert and return the ``_WORD_CACHE`` entry of a non-empty word."""
+    if len(_WORD_CACHE) >= _WORD_CACHE_MAX:
+        _WORD_CACHE.clear()
+    ent = ((w, 0, _zeros(len(w))), len(w) > 1 and w[-1] in ".!?…")
+    _WORD_CACHE[w] = ent
+    return ent
+
+
 class Fragment:
     """One run of character data with its inline context.
 
@@ -90,9 +125,13 @@ class Fragment:
 
 
 class RawParagraph:
-    """A maximal inline-text run: the PARA-level segmentation unit."""
+    """A maximal inline-text run: the PARA-level segmentation unit.
 
-    __slots__ = ("tag", "region", "boiler", "frags", "is_image")
+    ``chars``/``linked`` count the fragments' characters after trimming
+    ASCII whitespace, all and under a link; the segmenter adds them as it
+    appends fragments, so link density needs no second walk."""
+
+    __slots__ = ("tag", "region", "boiler", "frags", "is_image", "chars", "linked")
 
     def __init__(self, tag: str, region: int, boiler: bool, is_image: bool = False) -> None:
         self.tag = tag
@@ -100,16 +139,11 @@ class RawParagraph:
         self.boiler = boiler
         self.frags: list[Fragment] = []
         self.is_image = is_image
+        self.chars = 0
+        self.linked = 0
 
     def link_density(self) -> float:
-        total = 0
-        linked = 0
-        for f in self.frags:
-            n = len(f.text.strip(_ASCII_WS))
-            total += n
-            if f.link:
-                linked += n
-        return (linked / total) if total else 0.0
+        return (self.linked / self.chars) if self.chars else 0.0
 
     def pt_type(self) -> int:
         if self.is_image:
@@ -118,7 +152,12 @@ class RawParagraph:
 
 
 class _Segmenter(HTMLParser):
-    """Streaming collector of RawParagraphs (convert_charrefs decodes entities)."""
+    """Streaming collector of RawParagraphs (convert_charrefs decodes entities).
+
+    Tag behaviour comes from ``_TAG_TABLE``. Inline context is one depth
+    counter per slot; a close without a matching open leaves its counter at
+    0 (tolerates unbalanced markup). The link flag and a slot's style bit
+    change only when its counter enters or leaves 0."""
 
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
@@ -127,12 +166,9 @@ class _Segmenter(HTMLParser):
         self._region_stack: list[int] = [0]
         self._region_counter = 0
         self._boiler_depth = 0
-        self._link_depth = 0
-        self._sup_depth = 0
-        self._sub_depth = 0
-        self._bold_depth = 0
-        self._italic_depth = 0
-        self._mono_depth = 0
+        self._depths = [0] * len(_SLOT_TAGS)
+        self._link = False
+        self._style = 0
         self._current: RawParagraph | None = None
         self._para_tag = "body"
 
@@ -140,77 +176,63 @@ class _Segmenter(HTMLParser):
 
     def _flush(self) -> None:
         p = self._current
-        if p is not None and (
-            p.is_image or any(_NONWS_RE.search(f.text) for f in p.frags)
-        ):
+        if p is not None and (p.is_image or p.chars):
             self.paragraphs.append(p)
         self._current = None
-
-    def _ensure_para(self) -> RawParagraph:
-        if self._current is None:
-            self._current = RawParagraph(
-                self._para_tag, self._region_stack[-1], self._boiler_depth > 0
-            )
-        return self._current
 
     # -- HTMLParser hooks ----------------------------------------------------
 
     def handle_starttag(self, tag: str, attrs: list) -> None:
-        if tag == "br":
-            if self._current is not None:
-                self._current.frags.append(Fragment("\n", False, _BR_STYLE))
-            return
-        if tag in ("img", "hr"):
-            self._flush()
-            p = RawParagraph(tag, self._region_stack[-1], self._boiler_depth > 0, is_image=True)
-            self.paragraphs.append(p)
-            return
-        if tag in _VOID_TAGS:
-            return
-        if tag in BLOCK_TAGS:
-            self._flush()
-            self._para_tag = tag
-        if tag in REGION_TAGS:
-            self._region_counter += 1
-            self._region_stack.append(self._region_counter)
-        if tag in BOILERPLATE_TAGS:
-            self._boiler_depth += 1
-        if tag == "a":
-            self._link_depth += 1
-        elif tag == "sup":
-            self._sup_depth += 1
-        elif tag == "sub":
-            self._sub_depth += 1
-        elif tag in ("b", "strong"):
-            self._bold_depth += 1
-        elif tag in ("i", "em"):
-            self._italic_depth += 1
-        elif tag in ("code", "tt", "pre", "kbd", "samp"):
-            self._mono_depth += 1
+        kind, slot = _TAG_TABLE.get(tag, _PLAIN_TAG)
+        if kind:
+            if kind & _VOID:
+                if tag == "br":
+                    if self._current is not None:
+                        self._current.frags.append(Fragment("\n", False, _BR_STYLE))
+                elif tag == "img" or tag == "hr":
+                    self._flush()
+                    self.paragraphs.append(RawParagraph(
+                        tag, self._region_stack[-1], self._boiler_depth > 0, is_image=True))
+                return
+            if kind & _BLOCK:
+                self._flush()
+                self._para_tag = tag
+            if kind & _REGION:
+                self._region_counter += 1
+                self._region_stack.append(self._region_counter)
+            if kind & _BOILER:
+                self._boiler_depth += 1
+        if slot != _NO_SLOT:
+            depths = self._depths
+            depths[slot] += 1
+            if depths[slot] == 1:
+                if slot == _LINK_SLOT:
+                    self._link = True
+                else:
+                    self._style |= _SLOT_STYLE[slot]
         self._stack.append(tag)
 
     def handle_endtag(self, tag: str) -> None:
-        if tag in _VOID_TAGS:
-            return
-        if tag in BLOCK_TAGS:
-            self._flush()
-            self._para_tag = "body"
-        if tag in REGION_TAGS and len(self._region_stack) > 1:
-            self._region_stack.pop()
-        if tag in BOILERPLATE_TAGS and self._boiler_depth > 0:
-            self._boiler_depth -= 1
-        if tag == "a" and self._link_depth > 0:
-            self._link_depth -= 1
-        elif tag == "sup" and self._sup_depth > 0:
-            self._sup_depth -= 1
-        elif tag == "sub" and self._sub_depth > 0:
-            self._sub_depth -= 1
-        elif tag in ("b", "strong") and self._bold_depth > 0:
-            self._bold_depth -= 1
-        elif tag in ("i", "em") and self._italic_depth > 0:
-            self._italic_depth -= 1
-        elif tag in ("code", "tt", "pre", "kbd", "samp") and self._mono_depth > 0:
-            self._mono_depth -= 1
+        kind, slot = _TAG_TABLE.get(tag, _PLAIN_TAG)
+        if kind:
+            if kind & _VOID:
+                return
+            if kind & _BLOCK:
+                self._flush()
+                self._para_tag = "body"
+            if kind & _REGION and len(self._region_stack) > 1:
+                self._region_stack.pop()
+            if kind & _BOILER and self._boiler_depth > 0:
+                self._boiler_depth -= 1
+        if slot != _NO_SLOT:
+            depths = self._depths
+            if depths[slot] > 0:
+                depths[slot] -= 1
+                if not depths[slot]:
+                    if slot == _LINK_SLOT:
+                        self._link = False
+                    else:
+                        self._style &= ~_SLOT_STYLE[slot]
         # pop matching open tag if present (tolerates malformed nesting);
         # well-nested markup hits the O(1) top-of-stack case
         stack = self._stack
@@ -228,15 +250,16 @@ class _Segmenter(HTMLParser):
             return  # script/style/head payloads are never visible text
         if not data:
             return
-        p = self._ensure_para()
-        style = (
-            (1 if self._sup_depth else 0)
-            | (2 if self._sub_depth else 0)
-            | (64 if self._bold_depth else 0)
-            | (128 if self._italic_depth else 0)
-            | (256 if self._mono_depth else 0)
-        )
-        p.frags.append(Fragment(data, self._link_depth > 0, style))
+        p = self._current
+        if p is None:
+            p = self._current = RawParagraph(
+                self._para_tag, self._region_stack[-1], self._boiler_depth > 0)
+        link = self._link
+        p.frags.append(Fragment(data, link, self._style))
+        n = len(data.strip(_ASCII_WS))
+        p.chars += n
+        if link:
+            p.linked += n
 
     def close(self) -> None:  # noqa: D102 — flush trailing text
         super().close()
@@ -291,77 +314,93 @@ def split_lines(para: RawParagraph) -> list[list[tuple[str, int, tuple]]]:
     reference symbol attributes tesserocr/tesserocr.pyx:1018-1040).
     """
     # fast path: no <br>, every fragment unstyled (the overwhelmingly common
-    # case for web text) — pure regex split, no per-char bookkeeping; the
-    # per-word (word, 0, zeros) tuple and its sentence-end flag are cached
-    # (web text is Zipf-distributed, so the hit rate is high)
-    if all(f.style == 0 for f in para.frags):
-        lines: list[list[tuple[str, int, tuple]]] = []
-        cur: list[tuple[str, int, tuple]] = []
-        cache = _WORD_CACHE
-        for w in _WS_SPLIT_RE.split(" ".join([f.text for f in para.frags])):
-            if not w:  # re.split keeps boundary empties str.split() drops
-                continue
-            ent = cache.get(w)
-            if ent is None:
-                if len(cache) >= _WORD_CACHE_MAX:
-                    cache.clear()
-                ent = ((w, 0, _zeros(len(w))), w[-1] in ".!?…" and len(w) > 1)
-                cache[w] = ent
-            cur.append(ent[0])
-            if ent[1]:
-                lines.append(cur)
-                cur = []
-        if cur:
-            lines.append(cur)
-        return lines
-
-    # build one string per <br>-separated segment, tracking per-char flags
-    segments: list[list[tuple[str, int]]] = [[]]  # list of (char, style)
-    for f in para.frags:
-        if f.style == _BR_STYLE:
-            segments.append([])
-            continue
-        fl = f.style
-        for ch in f.text:
-            segments[-1].append((ch, fl))
-
+    # case for web text) — pure regex split; the per-word (word, 0, zeros)
+    # tuple and its sentence-end flag are cached (web text is
+    # Zipf-distributed, so the hit rate is high)
+    frags = para.frags
+    if not all(f.style == 0 for f in frags):
+        return _split_styled(frags)
+    cache = _WORD_CACHE
     lines: list[list[tuple[str, int, tuple]]] = []
-    for seg in segments:
-        if not seg:
+    cur: list[tuple[str, int, tuple]] = []
+    for w in _WS_SPLIT_RE.split(" ".join([f.text for f in frags])):
+        if not w:  # re.split keeps boundary empties str.split() drops
             continue
-        # rebuild words by walking original chars and collapsing whitespace;
-        # a word is sup/sub only if EVERY one of its chars is (AND-fold)
-        words: list[tuple[str, int, tuple]] = []
-        buf: list[str] = []
-        buf_char_flags: list[int] = []
-        for ch, fl in seg:
-            if ch in _WS_SET:
-                if buf:
-                    wf = buf_char_flags[0]
-                    for f in buf_char_flags:
-                        wf &= f
-                    words.append(("".join(buf), wf, tuple(buf_char_flags)))
-                    buf, buf_char_flags = [], []
-            else:
-                buf.append(ch)
-                buf_char_flags.append(fl)
-        if buf:
-            wf = buf_char_flags[0]
-            for f in buf_char_flags:
-                wf &= f
-            words.append(("".join(buf), wf, tuple(buf_char_flags)))
-        if not words:
-            continue
-        # sentence-boundary line breaks over the word sequence
-        cur: list[tuple[str, int, tuple]] = []
-        for item in words:
-            cur.append(item)
-            w = item[0]
-            if w and w[-1] in ".!?…" and len(w) > 1:
+        ent = cache.get(w) or _cache_word(w)
+        cur.append(ent[0])
+        if ent[1]:
+            lines.append(cur)
+            cur = []
+    if cur:
+        lines.append(cur)
+    return lines
+
+
+def _split_styled(frags: list[Fragment]) -> list[list[tuple[str, int, tuple]]]:
+    """``split_lines`` for paragraphs with styled or <br> fragments.
+
+    Fragments concatenate with no separator, so a word may span several of
+    them; its pieces wait in ``pend`` until whitespace, a <br> or the
+    paragraph end closes it. A word is sup/sub/... only if EVERY one of its
+    chars is (AND-fold of the piece styles); ``char_flags`` repeats each
+    piece's style over its chars."""
+    cache = _WORD_CACHE
+    lines: list[list[tuple[str, int, tuple]]] = []
+    cur: list[tuple[str, int, tuple]] = []
+    pend: list[tuple[str, int]] = []
+
+    def close_word() -> None:
+        nonlocal cur
+        if len(pend) == 1:
+            w, st = pend[0]
+            item = (w, st, (st,) * len(w))
+        else:
+            w = "".join([t for t, _ in pend])
+            st = -1
+            cfl: tuple = ()
+            for t, s in pend:
+                st &= s
+                cfl += (s,) * len(t)
+            item = (w, st, cfl)
+        pend.clear()
+        cur.append(item)
+        if len(w) > 1 and w[-1] in ".!?…":
+            lines.append(cur)
+            cur = []
+
+    for f in frags:
+        st = f.style
+        if st == _BR_STYLE:
+            if pend:
+                close_word()
+            if cur:
                 lines.append(cur)
                 cur = []
-        if cur:
-            lines.append(cur)
+            continue
+        pieces = _WS_SPLIT_RE.split(f.text)
+        if pieces[0]:
+            pend.append((pieces[0], st))
+        if len(pieces) == 1:
+            continue
+        if pend:
+            close_word()
+        last = pieces.pop()
+        for w in islice(pieces, 1, None):
+            if st:
+                cur.append((w, st, (st,) * len(w)))
+                sentence_end = len(w) > 1 and w[-1] in ".!?…"
+            else:
+                item, sentence_end = cache.get(w) or _cache_word(w)
+                cur.append(item)
+            if sentence_end:
+                lines.append(cur)
+                cur = []
+        if last:
+            pend.append((last, st))
+    if pend:
+        close_word()
+    if cur:
+        lines.append(cur)
     return lines
 
 

@@ -1744,36 +1744,6 @@ def make_bmp(width: int, height: int, bpp: int = 24, fill: int = 0) -> bytes:
     return header + dib + data
 
 
-def _png_filter_row(ftype: int, line: bytes, prior: bytes, ch: int) -> bytes:
-    """Apply (forward) PNG filter ``ftype`` to a raw scanline — the exact
-    inverse of the reconstruction in ``decode_png_pixels``. Unlike the
-    reconstruction, the forward direction predicts from RAW neighbors, so
-    every filter (Paeth included) vectorizes with no recurrence."""
-    if ftype == 0:
-        return bytes(line)
-    import numpy as np
-
-    cur = np.frombuffer(line, dtype=np.uint8).astype(np.int16)
-    if ftype == 2:
-        up = np.frombuffer(prior, dtype=np.uint8).astype(np.int16)
-        return ((cur - up) & 0xFF).astype(np.uint8).tobytes()
-    left = np.zeros_like(cur)
-    left[ch:] = cur[:-ch]
-    if ftype == 1:
-        return ((cur - left) & 0xFF).astype(np.uint8).tobytes()
-    up = np.frombuffer(prior, dtype=np.uint8).astype(np.int16)
-    if ftype == 3:
-        return ((cur - (left + up) // 2) & 0xFF).astype(np.uint8).tobytes()
-    ul = np.zeros_like(up)
-    ul[ch:] = up[:-ch]
-    p = left + up - ul  # Paeth: nearest of left/up/up-left, ties a, b, c
-    pa, pb, pc = np.abs(p - left), np.abs(p - up), np.abs(p - ul)
-    pred = np.where(
-        (pa <= pb) & (pa <= pc), left, np.where(pb <= pc, up, ul)
-    )
-    return ((cur - pred) & 0xFF).astype(np.uint8).tobytes()
-
-
 def _png_filter_pass(block, ch: int) -> bytes:
     """Forward-filter one pass (or whole sequential image) of scanlines
     with the synth's rotating per-row filter ``row % 5``, vectorized over
@@ -1781,7 +1751,7 @@ def _png_filter_pass(block, ch: int) -> bytes:
     paid more in call overhead than the filtering cost. ``block`` is a
     (nrows, stride) uint8 array of RAW scanlines; returns the filtered
     stream (1 filter-type byte + stride bytes per row), byte-identical to
-    ``_png_filter_row`` applied row by row."""
+    filtering row by row (the oracle in tests/test_pipeline_ops.py)."""
     import numpy as np
 
     nrows, stride = block.shape

@@ -8,16 +8,11 @@ JVM-side.
 
 The UDF surface:
 
-* ``make_extract_columns_udf`` — the production transport: spans travel as
+* ``make_extract_columns_udf`` — the extraction transport: spans travel as
   parallel primitive arrays and ``api.extract_pages`` re-zips them JVM-side
-  (measured ~1.6× faster end-to-end than array<struct> through Arrow).
-  The Recognize analogue (tesserocr/tesserocr.pyx:2136-2163).
-* ``make_extract_udf`` — same result as one nested struct column; the
-  simple/reference transport, kept for direct use and tests.
-* ``make_spans_long_kernel`` — mapInPandas kernel emitting flat exploded
-  span rows from Python. Kept for reference: measured 1.7x SLOWER than the
-  columnar transport + JVM posexplode plan that ``api.extract_spans_long``
-  uses (per-span rows through Arrow cost more than per-document arrays).
+  (measured ~1.6× faster end-to-end than array<struct> through Arrow, and
+  1.7× faster for ``api.extract_spans_long`` than emitting one row per span
+  from Python). The Recognize analogue (tesserocr/tesserocr.pyx:2136-2163).
 * ``make_extract_text_udf`` — text-only fast path (image_to_text,
   tesserocr/tesserocr.pyx:2683-2732); skips span materialization entirely —
   use it when the query only needs ``extracted_text`` (the layout-only/
@@ -31,6 +26,7 @@ exhausted yield NULL results instead of stalling a corpus-scale job.
 
 from __future__ import annotations
 
+import gc
 import time
 
 import pandas as pd
@@ -38,7 +34,6 @@ from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, ExtractorConfig
 from .core.extractor import Extractor
-from .schemas import EXTRACT_RESULT_SCHEMA
 
 def _as_variables_key(config: ExtractorConfig) -> tuple:
     # dataclass with a dict field is unhashable; normalize to a hashable twin
@@ -58,49 +53,35 @@ def _extractor_for(config: ExtractorConfig) -> Extractor:
     return ex
 
 
-def make_extract_udf(
-    config: ExtractorConfig | None = None,
-    timeout_ms_per_doc: int = 0,
-):
-    """Scalar Arrow pandas_udf: html:binary -> EXTRACT_RESULT_SCHEMA struct."""
-    cfg = config or DEFAULT_CONFIG
+def _per_doc(fn, html: pd.Series, timeout_ms_per_doc: int, timed_out) -> list:
+    """``fn`` over each document of one Arrow batch, under the batch's
+    deadline (``timeout_ms_per_doc`` × batch size, 0 = none): every document
+    starting after it yields ``timed_out``.
 
-    @F.pandas_udf(EXTRACT_RESULT_SCHEMA)
-    def extract(html: pd.Series) -> pd.DataFrame:
-        ex = _extractor_for(cfg)
-        n = len(html)
-        deadline = (
-            time.monotonic() + (timeout_ms_per_doc / 1000.0) * n
-            if timeout_ms_per_doc > 0 else None
-        )
-        texts: list[str | None] = []
-        spans: list[list | None] = []
-        osds: list[dict | None] = []
-        metrics: list[dict | None] = []
-        for raw in html:
-            if deadline is not None and time.monotonic() > deadline:
-                texts.append(None)
-                spans.append(None)
-                osds.append(None)
-                metrics.append(None)
-                continue
-            doc = ex.extract(raw)
-            texts.append(doc.text)
-            spans.append(doc.raw_spans)
-            osds.append(doc.osd)
-            metrics.append(doc.metrics)
-        return pd.DataFrame(
-            {"extracted_text": texts, "spans": spans, "osd": osds, "metrics": metrics}
-        )
-
-    return extract
+    The cyclic garbage collector is paused for the batch. Extraction makes
+    no reference cycles, so reference counting frees each document's
+    objects (tests/test_core.py checks it), while its allocations would
+    trigger full collections that walk the worker's whole heap."""
+    enabled = gc.isenabled()
+    gc.disable()
+    try:
+        if timeout_ms_per_doc <= 0:
+            return [fn(raw) for raw in html]
+        deadline = time.monotonic() + (timeout_ms_per_doc / 1000.0) * len(html)
+        return [timed_out if time.monotonic() > deadline else fn(raw) for raw in html]
+    finally:
+        if enabled:
+            gc.enable()
 
 
 _COL_NAMES = ("extracted_text", "level", "block_id", "para_id", "line_id",
               "word_id", "symbol_id", "block_type", "blanks", "x0", "y0",
               "x1", "y1", "flags", "s_text", "s_conf", "osd", "metrics")
 
-_EMPTY_COLS = ((),) * 13  # level..flags for a span-less document
+#: level..s_conf of a span-less document
+_EMPTY_COLS = ((),) * 15
+#: the row of a document the deadline skipped
+_TIMED_OUT_ROW = (None, *_EMPTY_COLS, None, None)
 
 
 def make_extract_columns_udf(
@@ -117,73 +98,25 @@ def make_extract_columns_udf(
 
     @F.pandas_udf(EXTRACT_COLUMNS_SCHEMA)
     def extract_cols(html: pd.Series) -> pd.DataFrame:
-        ex = _extractor_for(cfg)
-        n = len(html)
-        deadline = (
-            time.monotonic() + (timeout_ms_per_doc / 1000.0) * n
-            if timeout_ms_per_doc > 0 else None
-        )
-        rows = []
-        for raw in html:
-            if deadline is not None and time.monotonic() > deadline:
-                rows.append((None,) + ((),) * 15 + (None, None))
-                continue
-            d = ex.extract(raw)
-            if d.raw_spans:
-                (level, bid, pid, lid, wid, sid, bt, text, conf, blanks,
-                 bbox, flags) = zip(*d.raw_spans)
-                x0, y0, x1, y1 = zip(*bbox)
-                cols = (level, bid, pid, lid, wid, sid, bt, blanks,
-                        x0, y0, x1, y1, flags, text, conf)
-            else:
-                cols = _EMPTY_COLS + ((), ())
-            rows.append((d.text, *cols, d.osd, d.metrics))
-        return pd.DataFrame(rows, columns=list(_COL_NAMES))
+        extract = _extractor_for(cfg).extract
+
+        def row(raw) -> tuple:
+            d = extract(raw)
+            if not d.raw_spans:
+                return (d.text, *_EMPTY_COLS, d.osd, d.metrics)
+            (level, bid, pid, lid, wid, sid, bt, text, conf, blanks,
+             bbox, flags) = zip(*d.raw_spans)
+            x0, y0, x1, y1 = zip(*bbox)
+            return (d.text, level, bid, pid, lid, wid, sid, bt, blanks,
+                    x0, y0, x1, y1, flags, text, conf, d.osd, d.metrics)
+
+        rows = _per_doc(row, html, timeout_ms_per_doc, _TIMED_OUT_ROW)
+        if not rows:
+            return pd.DataFrame(columns=list(_COL_NAMES))
+        # one column per field, not one row tuple per document
+        return pd.DataFrame(dict(zip(_COL_NAMES, zip(*rows))))
 
     return extract_cols
-
-
-def make_spans_long_kernel(
-    config: ExtractorConfig | None = None,
-):
-    """mapInPandas kernel: (url, html, ...) batches -> flat SPANS_LONG rows.
-
-    NOTE: reference implementation only — ``api.extract_spans_long`` ships
-    per-document columnar arrays and explodes JVM-side instead, which
-    measures 1.7x faster end-to-end (row-per-span through Arrow is the
-    expensive part, not the nesting).
-    """
-    cfg = config or DEFAULT_CONFIG
-
-    def kernel(batches):
-        ex = _extractor_for(cfg)
-        for pdf in batches:
-            urls: list[str] = []
-            all_spans: list = []
-            for u, raw in zip(pdf["url"], pdf["html"]):
-                spans = ex.extract(raw).raw_spans
-                all_spans.extend(spans)
-                urls.extend([u] * len(spans))
-            if not all_spans:
-                yield pd.DataFrame(
-                    {c: [] for c in ("url", "level", "block_id", "para_id",
-                                     "line_id", "word_id", "symbol_id",
-                                     "block_type", "text", "conf", "blanks",
-                                     "x0", "y0", "x1", "y1", "flags")}
-                )
-                continue
-            (level, block_id, para_id, line_id, word_id, symbol_id, block_type,
-             text, conf, blanks, bbox, flags) = zip(*all_spans)
-            x0, y0, x1, y1 = zip(*bbox)
-            yield pd.DataFrame({
-                "url": urls, "level": level, "block_id": block_id,
-                "para_id": para_id, "line_id": line_id, "word_id": word_id,
-                "symbol_id": symbol_id, "block_type": block_type, "text": text,
-                "conf": conf, "blanks": blanks,
-                "x0": x0, "y0": y0, "x1": x1, "y1": y1, "flags": flags,
-            })
-
-    return kernel
 
 
 def make_extract_text_udf(
@@ -195,18 +128,7 @@ def make_extract_text_udf(
 
     @F.pandas_udf("string")
     def extract_text(html: pd.Series) -> pd.Series:
-        ex = _extractor_for(cfg)
-        n = len(html)
-        deadline = (
-            time.monotonic() + (timeout_ms_per_doc / 1000.0) * n
-            if timeout_ms_per_doc > 0 else None
-        )
-        out: list[str | None] = []
-        for raw in html:
-            if deadline is not None and time.monotonic() > deadline:
-                out.append(None)
-                continue
-            out.append(ex.extract_text(raw))
-        return pd.Series(out, dtype="object")
+        texts = _per_doc(_extractor_for(cfg).extract_text, html, timeout_ms_per_doc, None)
+        return pd.Series(texts, dtype="object")
 
     return extract_text

@@ -181,6 +181,67 @@ class TestInvariants:
         assert not flags["year"] & FLAG_NUMERIC
 
 
+    @pytest.mark.parametrize("psm", [PSM.AUTO, PSM.AUTO_ONLY, PSM.SINGLE_COLUMN,
+                                     PSM.SINGLE_LINE, PSM.SPARSE_TEXT])
+    @pytest.mark.parametrize("emit_symbols", ["0", "1"])
+    def test_metrics_count_the_spans(self, psm, emit_symbols):
+        ex = Extractor(ExtractorConfig(psm=psm, variables={"emit_symbols": emit_symbols}))
+        docs = [ex.extract(h) for h in (CANONICAL_HTML, b"", b"<p>a<br>b</p><img>")]
+        docs.append(ex.extract(CANONICAL_HTML, region=(0, 2, 30, 4)))
+        for d in docs:
+            n = {lvl: sum(1 for s in d.spans if s.level == lvl) for lvl in
+                 (RIL.BLOCK, RIL.PARA, RIL.TEXTLINE, RIL.WORD, RIL.SYMBOL)}
+            boiler = sum(1 for s in d.spans
+                         if s.level == RIL.BLOCK and s.flags & FLAG_BOILERPLATE)
+            assert (d.metrics["n_blocks"], d.metrics["n_paras"], d.metrics["n_lines"],
+                    d.metrics["n_words"], d.metrics["n_symbols"],
+                    d.metrics["n_boiler_blocks"]) == (
+                n[RIL.BLOCK], n[RIL.PARA], n[RIL.TEXTLINE], n[RIL.WORD],
+                n[RIL.SYMBOL], boiler)
+
+    def test_extraction_makes_no_reference_cycles(self):
+        """The UDF bodies pause the cyclic collector per batch; that is only
+        safe while reference counting frees everything extraction makes."""
+        import gc
+
+        docs = [CANONICAL_HTML, b"<p>a<br>b <b>c</b>d</p>", b"<p>unclosed <b>bold",
+                b"<p>x <![CDATA[ y ]]> z</p>", b"\xff<sup>2</sup>", None]
+        exs = [Extractor(ExtractorConfig(psm=psm, variables={"emit_symbols": "1"}))
+               for psm in (PSM.AUTO, PSM.OSD_ONLY, PSM.SINGLE_WORD, PSM.SPARSE_TEXT)]
+        gc.collect()
+        gc.disable()
+        try:
+            for ex in exs:
+                for h in docs:
+                    ex.extract(h)
+                    ex.extract_text(h)
+                    ex.extract(h, region=(0, 0, 5, 2))
+            assert gc.collect() == 0
+        finally:
+            gc.enable()
+
+    def test_udf_batch_loop_restores_the_collector(self):
+        import gc
+
+        import pandas as pd
+
+        from tesserocr_spark.udf import _per_doc
+
+        batch = pd.Series([CANONICAL_HTML, b"x"], dtype="object")
+        ex = Extractor()
+        for enabled in (True, False):
+            (gc.enable if enabled else gc.disable)()
+            try:
+                for timeout_ms in (0, 10_000):
+                    texts = _per_doc(ex.extract_text, batch, timeout_ms, None)
+                    assert texts == [CANONICAL_TEXT, "x\n"]
+                    assert gc.isenabled() is enabled
+                with pytest.raises(ZeroDivisionError):
+                    _per_doc(lambda raw: 1 // 0, batch, 0, None)
+                assert gc.isenabled() is enabled
+            finally:
+                gc.enable()
+
 class TestDegenerate:
     """Empty/degenerate inputs (reference tests/test_api.py:265-281)."""
 

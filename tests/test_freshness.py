@@ -10,6 +10,8 @@ These tests make the driver-cap rotation a *checked* mechanism:
 
 from __future__ import annotations
 
+import pytest
+
 from tesserocr_spark.queries import ORACLES, QUERIES, freshness
 
 
@@ -63,6 +65,45 @@ def test_entry_module_uses_freshness_order():
 
     assert list(entry.queries().keys()) == freshness.order_keys(QUERIES)
     assert list(entry.oracle_sql().keys()) == freshness.order_keys(ORACLES)
+
+
+def _load_update_script():
+    import importlib.util
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parents[1] / "scripts" / "update_oracle_laws.py"
+    spec = importlib.util.spec_from_file_location("update_oracle_laws", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@pytest.mark.parametrize("argv", [
+    ["--help"], ["-h"], ["--chek"], ["--check", "--bogus"], ["--round"],
+    ["--round", "x"], ["--round", "3", "extra"], ["--mig"],
+])
+def test_update_script_rejects_unknown_arguments_without_writing(argv, monkeypatch, capsys):
+    """Anything but --check / --round N / --migrate exits 2 with the usage
+    and never rewrites ORACLE_LAWS.json."""
+    from pathlib import Path
+
+    def no_write(*_a, **_k):
+        raise AssertionError("ORACLE_LAWS.json written on a rejected argument")
+
+    monkeypatch.setattr(Path, "write_text", no_write)
+    script = _load_update_script()
+    with pytest.raises(SystemExit) as exc:
+        script.main(argv)
+    assert exc.value.code == 2
+    assert "Usage: python scripts/update_oracle_laws.py" in capsys.readouterr().err
+
+
+def test_update_script_parses_its_options():
+    parse = _load_update_script().parse_args
+    args = parse(["--check", "--round", "7", "--migrate"])
+    assert (args.check, args.round, args.migrate) == (True, 7, True)
+    args = parse([])
+    assert (args.check, args.round, args.migrate) == (False, None, False)
 
 
 def test_ordering_deterministic():

@@ -3,6 +3,7 @@ generated HTML, not just the curated corpus."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -184,6 +185,97 @@ def test_detect_os_equals_per_char_classification(text, lang):
     from tesserocr_spark.core import detect_os
 
     assert detect_os(text, lang) == _detect_os_per_char(text, lang)
+
+
+def _split_lines_per_char(frags: list[tuple[str, int]]) -> list:
+    """split_lines as one step per character — the law the fragment-level
+    path must reproduce. Unstyled paragraphs join their fragments with a
+    space; styled ones concatenate them and carry a style per character."""
+    from tesserocr_spark.core.segment import _BR_STYLE
+
+    ws = " \t\n\r\f"
+    if all(st == 0 for _, st in frags):
+        chars = [(ch, 0) for ch in " ".join(t for t, _ in frags)]
+        segments = [chars]
+    else:
+        segments = [[]]
+        for text, st in frags:
+            if st == _BR_STYLE:
+                segments.append([])
+            else:
+                segments[-1].extend((ch, st) for ch in text)
+    lines = []
+    for seg in segments:
+        words, buf = [], []
+        for ch, st in seg + [(" ", 0)]:
+            if ch in ws:
+                if buf:
+                    wf = buf[0][1]
+                    for _, f in buf:
+                        wf &= f
+                    words.append(("".join(c for c, _ in buf), wf, tuple(f for _, f in buf)))
+                    buf = []
+            else:
+                buf.append((ch, st))
+        cur = []
+        for item in words:
+            cur.append(item)
+            if len(item[0]) > 1 and item[0][-1] in ".!?…":
+                lines.append(cur)
+                cur = []
+        if cur:
+            lines.append(cur)
+    return lines
+
+
+frag_text = st.lists(
+    st.sampled_from(["a", "b", "Z", "7", " ", "\t", "\n", "\r", "\f", "\v",
+                     "\u00a0", "\u3000", "…", ".", "!", "?", ",", "ab.", "x!"]),
+    min_size=1, max_size=8,
+).map("".join)
+frag_style = st.sampled_from([0, 0, 0, 1, 2, 64, 128, 256, 1 | 64, -1])
+
+
+@given(st.lists(st.tuples(frag_text, frag_style), max_size=12))
+@settings(max_examples=400, deadline=None)
+def test_split_lines_equals_per_char_reference(frags):
+    from tesserocr_spark.core.segment import _BR_STYLE, Fragment, RawParagraph, split_lines
+
+    frags = [("\n", st) if st == _BR_STYLE else (t, st) for t, st in frags]
+    para = RawParagraph("p", 0, False)
+    para.frags = [Fragment(t, False, st) for t, st in frags]
+    assert split_lines(para) == _split_lines_per_char(frags)
+
+
+@pytest.mark.parametrize("html,frags,chars,linked", [
+    # unbalanced </b>: the extra close leaves bold at depth 0
+    ("<p>a <b>bold</b></b> tail <b>x</b>y</p>",
+     [("a ", False, 0), ("bold", False, 64), (" tail ", False, 0), ("x", False, 64),
+      ("y", False, 0)], 11, 0),
+    # stray </a> before any <a>, and a doubled close after one
+    ("<p>pre </a>stray <a>in<b>link</b></a></a> post</p>",
+     [("pre ", False, 0), ("stray ", False, 0), ("in", True, 0), ("link", True, 64),
+      (" post", False, 0)], 18, 6),
+    # nested <sup><sup>: still superscript after the inner close
+    ("<p>H<sup>2<sup>n</sup>d</sup> O<sub>x</sub></p>",
+     [("H", False, 0), ("2", False, 1), ("n", False, 1), ("d", False, 1), (" O", False, 0),
+      ("x", False, 2)], 6, 0),
+    # crossed italics: </i> closes the <em> slot's shared counter once
+    ("<p><i>it <em>both</i> after</em> end <code>c</code></p>",
+     [("it ", False, 128), ("both", False, 128), (" after", False, 128),
+      (" end ", False, 0), ("c", False, 256)], 15, 0),
+    # closes before any open, and <b>/<strong> sharing one counter
+    ("</b></sup><p>start</i> <b><strong>s</b> t</strong> u</p>",
+     [("start", False, 0), (" ", False, 0), ("s", False, 64), (" t", False, 64),
+      (" u", False, 0)], 8, 0),
+])
+def test_segmenter_depth_counters_on_unbalanced_markup(html, frags, chars, linked):
+    from tesserocr_spark.core.segment import parse_paragraphs, parse_paragraphs_stdlib
+
+    for parse in (parse_paragraphs, parse_paragraphs_stdlib):
+        (para,) = parse(html)
+        assert [(f.text, f.link, f.style) for f in para.frags] == frags
+        assert (para.chars, para.linked) == (chars, linked)
 
 
 class TestContainerParserProperties:
