@@ -922,13 +922,22 @@ class TestCCClusters:
         """Alternating large-star/small-star must converge within the round
         cap on a diameter-400 path (plain propagation would need 400 rounds)
         and must agree with union-find ground truth on a random graph."""
+        self._adversarial_graphs(spark, local_edges=0)
+
+    def test_local_finish_adversarial_graphs(self, spark):
+        """The same graphs at the default edge budget, which both fit under:
+        the driver-side union-find finish must give the same labels."""
+        self._adversarial_graphs(spark)
+
+    @staticmethod
+    def _adversarial_graphs(spark, **budget):
         import random
 
         from tesserocr_spark.queries.dedup import connected_components
 
         def labels_of(edges_py):
             df = spark.createDataFrame(edges_py, "src long, dst long")
-            return {r.node: r.label for r in connected_components(df).collect()}
+            return {r.node: r.label for r in connected_components(df, **budget).collect()}
 
         lab = labels_of([(i, i + 1) for i in range(400)])
         assert set(lab.values()) == {0} and len(lab) == 401
@@ -957,7 +966,30 @@ class TestCCClusters:
 
         df = spark.createDataFrame([(i, i + 1) for i in range(400)], "src long, dst long")
         with pytest.raises(RuntimeError, match="not converged after 1 rounds"):
-            connected_components(df, max_rounds=1)
+            connected_components(df, max_rounds=1, local_edges=0)
+
+    def test_local_finish_job_count(self, spark):
+        """Per-round jobs must not come back unseen: under the edge budget the
+        400-edge path costs one count, one Arrow fetch and the collect (4 jobs
+        measured with AQE on); pure star contraction pays for every round."""
+        from tesserocr_spark.queries.dedup import connected_components
+
+        sc = spark.sparkContext
+        df = spark.createDataFrame([(i, i + 1) for i in range(400)], "src long, dst long")
+
+        def jobs(gid, **budget):
+            sc.setJobGroup(gid, gid)
+            try:
+                rows = connected_components(df, **budget).collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert len(rows) == 401 and {r.label for r in rows} == {0}
+            sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+            return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+        local = 4
+        assert jobs("cc_local_finish") <= local
+        assert jobs("cc_star_rounds", local_edges=0) >= 4 * local
 
     def test_planted_pairs_cluster_to_min_id(self, spark):
         from tesserocr_spark.queries.dedup import (

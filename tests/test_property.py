@@ -4,7 +4,7 @@ generated HTML, not just the curated corpus."""
 from __future__ import annotations
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from tesserocr_spark import PSM, RIL, ExtractorConfig
@@ -759,3 +759,78 @@ class TestContainerParserProperties:
         decode_media(bytes(gif))  # must not raise
         px = decode_gif_pixels(bytes(gif))
         assert px is None or len(px) == 17 * 9
+
+
+# -- connected components: every edge budget gives the same labels ------------
+
+def _union_find_labels(edges):
+    """(node, component minimum) over the non-loop edges."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a != b:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(n, find(n)) for n in parent}
+
+
+_PATH = [(i, i + 1) for i in range(16)]
+_CLIQUE = [(a, b) for a in range(8) for b in range(a + 1, 8)]
+
+
+@given(
+    edges=st.lists(st.tuples(st.integers(0, 30), st.integers(0, 30)), max_size=30),
+    typ=st.sampled_from(["int", "bigint"]),
+)
+@example(edges=[], typ="int")
+@example(edges=[], typ="bigint")
+@example(edges=[(b, a) for a, b in reversed(_PATH)], typ="bigint")
+@example(edges=_CLIQUE, typ="int")
+@example(edges=[(0, i) for i in range(1, 20)] + [(40, i) for i in range(21, 40)], typ="int")
+@example(edges=[(1, 1), (2, 3), (3, 2), (2, 3), (5, 5), (5, 6), (6, 5), (7, 7)], typ="bigint")
+@example(edges=[(2**40 + 1, 2**40), (2**40 + 1, 3), (2**62, 5)], typ="bigint")
+@settings(max_examples=4, deadline=None)
+def test_connected_components_same_at_every_budget(spark, edges, typ):
+    """Pure star contraction (``local_edges=0``), a budget one below the
+    distinct edge count (at least one distributed round, then either path)
+    and the default budget's driver finish give the same (node, label) set
+    as union-find, with one schema typed like the input columns — also for
+    an empty edge list."""
+    from tesserocr_spark.queries.dedup import connected_components
+
+    df = spark.createDataFrame(edges, f"src {typ}, dst {typ}")
+    n = len({(max(a, b), min(a, b)) for a, b in edges if a != b})
+    outs = [connected_components(df, **kw)
+            for kw in ({"local_edges": 0}, {"local_edges": max(n - 1, 0)}, {})]
+    want = _union_find_labels(edges)
+    for out in outs:
+        assert out.schema == outs[0].schema
+        assert [f.name for f in out.schema] == ["node", "label"]
+        assert [f.dataType.simpleString() for f in out.schema] == [typ, typ]
+        assert {tuple(r) for r in out.collect()} == want
+
+
+def test_connected_components_local_finish_after_a_round(spark, monkeypatch):
+    """The 8-clique's 28 edges exceed budget 27; one star round contracts
+    them to a 7-edge star, which the driver then finishes."""
+    from tesserocr_spark.queries import dedup
+
+    seen = []
+    finish = dedup._local_components
+
+    def spy(E):
+        seen.append(E.count())
+        return finish(E)
+
+    monkeypatch.setattr(dedup, "_local_components", spy)
+    df = spark.createDataFrame(_CLIQUE, "src long, dst long")
+    labels = {tuple(r) for r in dedup.connected_components(df, local_edges=27).collect()}
+    assert seen == [7]
+    assert labels == {(n, 0) for n in range(8)}
