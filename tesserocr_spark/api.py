@@ -30,8 +30,11 @@ def extract_pages(
     pages: DataFrame,
     config: ExtractorConfig | None = None,
     timeout_ms_per_doc: int = 0,
+    region: tuple[int, int, int, int] | None = None,
 ) -> DataFrame:
     """pages -> docs: adds extracted_text, spans, osd, metrics (Recognize).
+    ``region=(left, top, width, height)`` keeps only the spans inside that
+    char-grid rectangle (SetRectangle).
 
     Transport: the UDF ships spans as parallel primitive arrays (Arrow loves
     flat arrays; array<struct> through the Python boundary measured ~1.6x
@@ -40,7 +43,7 @@ def extract_pages(
     """
     from .udf import make_extract_columns_udf
 
-    udf = make_extract_columns_udf(config, timeout_ms_per_doc)
+    udf = make_extract_columns_udf(config, timeout_ms_per_doc, region)
     keep = [c for c in ("url", "warc_ts", "lang", "bucket") if c in pages.columns]
     cols = pages.select(*keep, udf(F.col("html")).alias("r"))
     bbox_arr = F.arrays_zip(
@@ -184,34 +187,9 @@ class SparkPageAPI:
         if self._pages is None:
             raise RuntimeError("no pages bound; call set_pages() first")
         if self._docs is None:
-            keep = [c for c in ("url", "warc_ts", "lang") if c in self._pages.columns]
-            docs = extract_pages(self._pages, self.config, timeout_ms_per_doc)
-            if self._region is not None:
-                # region re-extraction: filter word spans by the rectangle in
-                # the *original* geometry is done inside the core; here we
-                # re-run the UDF with the region closed over.
-                from .schemas import EXTRACT_RESULT_SCHEMA
-
-                region = self._region
-                cfg = self.config
-
-                @F.pandas_udf(EXTRACT_RESULT_SCHEMA)
-                def extract_region(html: pd.Series) -> pd.DataFrame:
-                    from .udf import _extractor_for
-
-                    ex = _extractor_for(cfg)
-                    rows = [ex.extract(h, region=region) for h in html]
-                    return pd.DataFrame({
-                        "extracted_text": [d.text for d in rows],
-                        "spans": [d.raw_spans for d in rows],
-                        "osd": [d.osd for d in rows],
-                        "metrics": [d.metrics for d in rows],
-                    })
-
-                docs = self._pages.select(
-                    *keep, extract_region(F.col("html")).alias("res")
-                ).select(*keep, "res.*")
-            self._docs = docs.persist()
+            self._docs = extract_pages(
+                self._pages, self.config, timeout_ms_per_doc, region=self._region
+            ).persist()
         return self._docs
 
     def analyse_layout(self) -> DataFrame:

@@ -249,19 +249,28 @@ def _minhash_signatures(cand: DataFrame) -> DataFrame:
     return _minhash_signatures_from(_shingle_array(cand))
 
 
-def _minhash_array(sh: DataFrame) -> DataFrame:
-    """(doc_id, mh: array<bigint>[8]) signature-array frame. Callers that
-    go on to index ``mh`` inside a lambda (the band-key build) MUST persist
-    this frame first: Catalyst's CollapseProject inlines a projected alias
-    into every lambda reference, so an unpersisted ``mh`` is re-computed
-    per reference — 8 references × 8 h31 evaluations ≈ 64× the md5 work
-    (measured 2.6× wall on the whole query; same trap as the r02 thin-
-    transport experiments in BENCH/PLANS.md). A persisted frame makes
-    ``mh[i]`` plain array indexing against the cached column."""
-    return (
-        sh.filter(F.size("sh") > 0)
-        .select("doc_id", F.expr(_H31_EXPR).alias("h31"))
-        .select("doc_id", F.expr(_MINHASH_ARRAY_EXPR).alias("mh"))
+def _shingle_hashes(cand: DataFrame) -> DataFrame:
+    """(doc_id, sh, h31) — the shingle arrays plus each shingle's 31-bit
+    base hash. Persist it before ``_minhash_array``: each of the 8 per-band
+    lambdas of ``_MINHASH_ARRAY_EXPR`` reads ``h31``, and CollapseProject
+    inlines an unpersisted ``h31`` projection into every one of them, so
+    every shingle would be md5-hashed once per band
+    (tests/test_plans.py guards the optimized plan)."""
+    return _shingle_array(cand).withColumn("h31", F.expr(_H31_EXPR))
+
+
+def _minhash_array(shh: DataFrame) -> DataFrame:
+    """(doc_id, mh: array<bigint>[8]) signature-array frame from a persisted
+    ``_shingle_hashes`` frame. Callers that go on to index ``mh`` inside a
+    lambda (the band-key build) MUST persist this frame too: Catalyst's
+    CollapseProject inlines a projected alias into every lambda reference,
+    so an unpersisted ``mh`` is re-computed per reference — 8 references ×
+    8 h31 evaluations ≈ 64× the md5 work (measured 2.6× wall on the whole
+    query; same trap as the r02 thin-transport experiments in
+    BENCH/PLANS.md). A persisted frame makes ``mh[i]`` plain array indexing
+    against the cached column."""
+    return shh.filter(F.size("sh") > 0).select(
+        "doc_id", F.expr(_MINHASH_ARRAY_EXPR).alias("mh")
     )
 
 
@@ -340,12 +349,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_lsh_pairs_frame(cand: DataFrame) -> DataFrame:
     """The banded-LSH pair operator over any (doc_id, text) frame — the
     plant-free production path the job CLI runs on real corpora."""
-    # materialize the shingle frame once: without this the corpus parquet is
-    # scanned 8x (band keys twice, shingle sets four times). At 10^12 docs
-    # this persist is the write-signatures-to-a-side-table stage of a real
-    # dedup campaign; Spark's cache manager dedupes by canonical plan, so
-    # repeated invocations share one materialization.
-    sh = track_persist(_shingle_array(cand))
+    # materialize the shingle frame (with its base hashes) once: without
+    # this the corpus parquet is scanned 8x (band keys twice, shingle sets
+    # four times). At 10^12 docs this persist is the write-signatures-to-a-
+    # side-table stage of a real dedup campaign; Spark's cache manager
+    # dedupes by canonical plan, so repeated invocations share one
+    # materialization.
+    sh = track_persist(_shingle_hashes(cand))
     bk = _band_keys_from(track_persist(_minhash_array(sh)))
     a, b = bk.alias("a"), bk.alias("b")
     pairs = (

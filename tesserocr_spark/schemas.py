@@ -66,14 +66,6 @@ METRICS_SCHEMA = T.StructType([
     T.StructField("truncated", T.BooleanType(), False),
 ])
 
-#: full result of the extraction UDF (the PAGE_RES analogue as a column).
-EXTRACT_RESULT_SCHEMA = T.StructType([
-    T.StructField("extracted_text", T.StringType(), True),
-    T.StructField("spans", T.ArrayType(SPAN_SCHEMA), True),
-    T.StructField("osd", OSD_SCHEMA, True),
-    T.StructField("metrics", METRICS_SCHEMA, True),
-])
-
 #: columnar transport schema of the extraction UDF: spans travel as parallel
 #: primitive arrays (one per span field) and are re-zipped into the nested
 #: array<struct> JVM-side with arrays_zip — ~1.6-1.8x cheaper end-to-end than
@@ -93,8 +85,9 @@ EXTRACT_COLUMNS_SCHEMA = T.StructType([
 ])
 
 #: flat exploded-spans schema — the hot path for corpus-scale span queries:
-#: emitted directly by a mapInPandas kernel as columnar arrays (no nested
-#: structs through Arrow, no per-span dicts anywhere).
+#: the rows of ``api.extract_spans_long``, i.e. the columns UDF above, one
+#: flat arrays_zip and a posexplode (no nested structs through Arrow, no
+#: per-span dicts anywhere).
 SPANS_LONG_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
     T.StructField("level", T.IntegerType(), False),

@@ -87,11 +87,13 @@ _TIMED_OUT_ROW = (None, *_EMPTY_COLS, None, None)
 def make_extract_columns_udf(
     config: ExtractorConfig | None = None,
     timeout_ms_per_doc: int = 0,
+    region: tuple[int, int, int, int] | None = None,
 ):
     """Scalar Arrow pandas_udf: html -> EXTRACT_COLUMNS_SCHEMA (columnar
     span transport — see schemas.EXTRACT_COLUMNS_SCHEMA). Used by
     ``api.extract_pages``, which re-zips the arrays into the public nested
-    ``spans`` column JVM-side."""
+    ``spans`` column JVM-side. ``region`` is passed to ``Extractor.extract``
+    (SetRectangle)."""
     from .schemas import EXTRACT_COLUMNS_SCHEMA
 
     cfg = config or DEFAULT_CONFIG
@@ -101,7 +103,7 @@ def make_extract_columns_udf(
         extract = _extractor_for(cfg).extract
 
         def row(raw) -> tuple:
-            d = extract(raw)
+            d = extract(raw, region)
             if not d.raw_spans:
                 return (d.text, *_EMPTY_COLS, d.osd, d.metrics)
             (level, bid, pid, lid, wid, sid, bt, text, conf, blanks,

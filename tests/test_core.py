@@ -236,6 +236,10 @@ class TestInvariants:
                     texts = _per_doc(ex.extract_text, batch, timeout_ms, None)
                     assert texts == [CANONICAL_TEXT, "x\n"]
                     assert gc.isenabled() is enabled
+                    texts = _per_doc(lambda raw: ex.extract(raw, (0, 0, 500, 1)).text,
+                                     batch, timeout_ms, None)
+                    assert texts == ["The Headline\n", "x\n"]
+                    assert gc.isenabled() is enabled
                 with pytest.raises(ZeroDivisionError):
                     _per_doc(lambda raw: 1 // 0, batch, 0, None)
                 assert gc.isenabled() is enabled

@@ -52,11 +52,11 @@ class TestDedup:
             _candidates_near,
             _minhash_array,
             _minhash_signatures_from,
-            _shingle_array,
+            _shingle_hashes,
             dedup_minhash_lsh,
         )
 
-        sh = _shingle_array(_candidates_near(spark, SF_DIR)).persist()
+        sh = _shingle_hashes(_candidates_near(spark, SF_DIR)).persist()
         sig = _minhash_signatures_from(sh)
         a, b = sig.alias("a"), sig.alias("b")
         old_cand = (

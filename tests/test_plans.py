@@ -171,6 +171,21 @@ def test_minhash_lsh_banded_equi_join_not_allpairs(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_minhash_lsh_hashes_each_shingle_once(spark):
+    """Each shingle's md5 base hash is computed once, in the persisted
+    shingle frame — never under the per-band minhash projection, where
+    CollapseProject would inline it into all 8 band lambdas and hash every
+    shingle once per band."""
+    from tesserocr_spark.queries.dedup import dedup_minhash_lsh
+
+    df = dedup_minhash_lsh(spark, SF_DIR)
+    opt = df._jdf.queryExecution().optimizedPlan().toString()
+    minhash = [ln for ln in opt.splitlines() if "array_min(" in ln]
+    assert minhash, "no minhash projection in the optimized plan"
+    assert not [ln for ln in minhash if "md5(" in ln]
+    assert "md5(" in opt  # the base hash still exists, once, below the cache
+
+
 def test_simhash_pairs_use_equi_join_not_allpairs(spark):
     """Pigeonhole bit-slice blocking must reach the join as equi keys — an
     all-pairs theta join (BNLJ/cartesian) is the O(N²) scale-killer."""

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import re
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from tesserocr_spark import OEM, RIL
@@ -85,3 +88,39 @@ def test_set_leptonica_log_level(spark):
         with pytest.raises(ValueError, match="LeptLogLevel"):
             set_leptonica_log_level(spark, bad)
     set_leptonica_log_level(spark, LeptLogLevel.ERROR)  # restore quiet tests
+
+
+_COMMAND_RE = re.compile(r"\b(?:python3?|bash)\s+(.*)")
+_REL_PATH_RE = re.compile(r"\.?[\w-]+(?:[/.][\w-]*)*")
+
+
+def _command_paths(text: str) -> list[tuple[int, str]]:
+    """(line number, token) for each relative path (has a ``/`` or ends in
+    ``.py``/``.sh``) after ``python``/``python3``/``bash`` on a line, up to
+    the end of an inline code span or a ``#`` comment."""
+    found = []
+    for n, line in enumerate(text.splitlines(), 1):
+        for m in _COMMAND_RE.finditer(line):
+            command = m.group(1).split("`")[0].split(" #")[0]
+            for tok in command.split():
+                tok = tok.rstrip("'\"(),.:;").lstrip("'\"(,")
+                if (("/" in tok or tok.endswith((".py", ".sh")))
+                        and _REL_PATH_RE.fullmatch(tok)):
+                    found.append((n, tok))
+    return found
+
+
+def test_doc_command_paths_exist():
+    """Every repo path on a command line of the docs a reader runs first
+    names a file or directory that exists."""
+    assert _command_paths("python scripts/gone.py 1 /tmp/x <sf>\n`python bench.py`.") == [
+        (1, "scripts/gone.py"), (2, "bench.py")]
+    root = Path(__file__).resolve().parents[1]
+    missing, n_checked = [], 0
+    for doc in ("README.md", "CLAUDE.md", ".claude/skills/verify/SKILL.md"):
+        for n, tok in _command_paths((root / doc).read_text()):
+            n_checked += 1
+            if not (root / tok).exists():
+                missing.append(f"{doc}:{n}: {tok}")
+    assert n_checked >= 10
+    assert not missing

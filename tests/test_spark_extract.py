@@ -207,6 +207,30 @@ class TestAPIFacade:
                 (F.col("conf") < 84) | (F.col("conf") > 95)
             ).count() == 0
 
+    def test_region_recognize_equals_local_core(self, spark, pages):
+        """SetRectangle goes through the one columns UDF: per url, text and
+        spans equal the local core's ``extract(html, region=...)``."""
+        from tesserocr_spark.schemas import SPAN_SCHEMA
+
+        region = (0, 1, 40, 3)
+        api = SparkPageAPI(spark).set_pages(pages.limit(20)).set_rectangle(*region)
+        docs = api.recognize()
+        assert docs.schema["spans"].dataType.elementType.names == SPAN_SCHEMA.names
+        got = {r.url: r for r in docs.select("url", "extracted_text", "spans").collect()}
+        assert len(got) == 20
+        html_by_url = {p[0]: p[2] for p in map(make_page, range(N_PAGES))}
+        ex = Extractor()
+        n_cropped = 0
+        for url in got:
+            html = html_by_url[url]
+            want = ex.extract(html, region=region)
+            assert got[url].extracted_text == want.text, url
+            spans = [(*s[:10], tuple(s.bbox), s.flags) for s in got[url].spans]
+            assert spans == [(*s[:10], tuple(s[10]), s[11]) for s in want.raw_spans], url
+            n_cropped += want.text != ex.extract(html).text
+        assert n_cropped > 0
+        api.end()
+
     def test_unbound_raises(self, spark):
         api = SparkPageAPI(spark)
         with pytest.raises(RuntimeError):
