@@ -56,8 +56,8 @@ def main(argv: list[str] | None = None) -> int:
                          "from all but its corpus-order-first occurrence; "
                          "writes cleaned (doc_id, text) to <output>.clean")
     args = ap.parse_args(argv)
-    if (args.dedup_campaign or args.sentence_dedup
-            or args.substring_dedup) and not args.input:
+    dedup_mode = args.dedup_campaign or args.sentence_dedup or args.substring_dedup
+    if dedup_mode and not args.input:
         ap.error("--dedup-campaign/--sentence-dedup/--substring-dedup "
                  "require --input (documents parquet)")
 
@@ -73,64 +73,32 @@ def main(argv: list[str] | None = None) -> int:
         .getOrCreate()
     )
 
-    if args.sentence_dedup:
-        from tesserocr_spark.queries.dedup import sentence_dedup_frame
-
-        docs = (
-            spark.read.parquet(args.input)
-            .select("doc_id", "text")
-            .repartition(4 * spark.sparkContext.defaultParallelism)
-        )
-        sentence_dedup_frame(docs).write.mode("overwrite").parquet(
-            f"{args.output}.clean"
-        )
-        n = spark.read.parquet(f"{args.output}.clean").count()
-        print(json.dumps({"clean": f"{args.output}.clean", "n_docs": n}))
-        spark.stop()
-        return 0
-
-    if args.substring_dedup:
-        from tesserocr_spark.queries.dedup import substring_dedup_frame
+    if dedup_mode:
+        from tesserocr_spark.pages import spread
+        from tesserocr_spark.queries import dedup
         from tesserocr_spark.queries.registry import release_cache
 
-        docs = (
-            spark.read.parquet(args.input)
-            .select("doc_id", "text")
-            .repartition(4 * spark.sparkContext.defaultParallelism)
-        )
-        substring_dedup_frame(docs).write.mode("overwrite").parquet(
-            f"{args.output}.clean"
-        )
-        n = spark.read.parquet(f"{args.output}.clean").count()
-        release_cache()  # free the persisted word-array frame
-        print(json.dumps({"clean": f"{args.output}.clean", "n_docs": n}))
-        spark.stop()
-        return 0
-
-    if args.dedup_campaign:
-        from tesserocr_spark.queries.dedup import campaign_keep_frame
-        from tesserocr_spark.queries.registry import release_cache
-
-        # input parquet may be single-partition (the testdata files are) —
-        # spread the md5-heavy signature projections across the cluster
-        # before any work, like pages_from_documents does for extraction
-        docs = (
-            spark.read.parquet(args.input)
-            .select("doc_id", "text")
-            .repartition(4 * spark.sparkContext.defaultParallelism)
-        )
-        keep = campaign_keep_frame(docs, pair_source=args.dedup_campaign)
-        keep.write.mode("overwrite").parquet(f"{args.output}.keep")
-        kept = spark.read.parquet(f"{args.output}.keep")
-        n_docs, n_kept = docs.count(), kept.count()
-        release_cache()  # free the signature side-tables (terminal action)
-        print(json.dumps({
-            "keep": f"{args.output}.keep",
-            "pair_source": args.dedup_campaign,
-            "n_docs": n_docs,
-            "n_kept": n_kept,
-            "n_dropped": n_docs - n_kept,
-        }))
+        docs = spread(spark.read.parquet(args.input).select("doc_id", "text"))
+        if args.sentence_dedup or args.substring_dedup:
+            out = f"{args.output}.clean"
+            clean = (dedup.sentence_dedup_frame if args.sentence_dedup
+                     else dedup.substring_dedup_frame)
+            clean(docs).write.mode("overwrite").parquet(out)
+            report = {"clean": out, "n_docs": spark.read.parquet(out).count()}
+        else:
+            out = f"{args.output}.keep"
+            keep = dedup.campaign_keep_frame(docs, pair_source=args.dedup_campaign)
+            keep.write.mode("overwrite").parquet(out)
+            n_docs, n_kept = docs.count(), spark.read.parquet(out).count()
+            report = {
+                "keep": out,
+                "pair_source": args.dedup_campaign,
+                "n_docs": n_docs,
+                "n_kept": n_kept,
+                "n_dropped": n_docs - n_kept,
+            }
+        release_cache()  # free the persisted side-tables (terminal action)
+        print(json.dumps(report))
         spark.stop()
         return 0
 

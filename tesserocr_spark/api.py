@@ -13,17 +13,40 @@ DataFrame query over the exploded spans view, fully Catalyst-planned.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, ExtractorConfig
 from .constants import PT, RIL
 from .core.osd import AVAILABLE_LANGUAGES
-from .udf import make_extract_text_udf
+from .udf import make_extract_columns_udf, make_extract_text_udf
 
 #: reading-order sort key of the span hierarchy (parents before children:
 #: lower levels carry -1 in child id slots).
 SPAN_ORDER = ("block_id", "para_id", "line_id", "word_id", "symbol_id", "level")
+
+
+#: the span fields in SPAN_SCHEMA order, each with the extraction-UDF column
+#: (EXTRACT_COLUMNS_SCHEMA) it comes from; ``bbox`` is four corner columns.
+SPAN_COLUMNS = (
+    ("level", "level"), ("block_id", "block_id"), ("para_id", "para_id"),
+    ("line_id", "line_id"), ("word_id", "word_id"), ("symbol_id", "symbol_id"),
+    ("block_type", "block_type"), ("text", "s_text"), ("conf", "s_conf"),
+    ("blanks", "blanks"), ("bbox", ("x0", "y0", "x1", "y1")), ("flags", "flags"),
+)
+
+
+def _zip_spans(flat: bool) -> Column:
+    """arrays_zip of the UDF result ``r``'s span columns into one span struct
+    per element: nested as SPAN_SCHEMA, or with the bbox corners ``flat``."""
+    fields = []
+    for name, src in SPAN_COLUMNS:
+        if isinstance(src, str):
+            fields.append(F.col(f"r.{src}").alias(name))
+            continue
+        corners = [F.col(f"r.{c}").alias(c) for c in src]
+        fields += corners if flat else [F.arrays_zip(*corners).alias(name)]
+    return F.arrays_zip(*fields)
 
 
 def extract_pages(
@@ -41,33 +64,12 @@ def extract_pages(
     slower end-to-end) and the nested ``spans`` column is rebuilt JVM-side
     with two codegen'd arrays_zip calls — public schema unchanged.
     """
-    from .udf import make_extract_columns_udf
-
     udf = make_extract_columns_udf(config, timeout_ms_per_doc, region)
     keep = [c for c in ("url", "warc_ts", "lang", "bucket") if c in pages.columns]
-    cols = pages.select(*keep, udf(F.col("html")).alias("r"))
-    bbox_arr = F.arrays_zip(
-        F.col("r.x0").alias("x0"), F.col("r.y0").alias("y0"),
-        F.col("r.x1").alias("x1"), F.col("r.y1").alias("y1"),
-    )
-    spans = F.arrays_zip(
-        F.col("r.level").alias("level"),
-        F.col("r.block_id").alias("block_id"),
-        F.col("r.para_id").alias("para_id"),
-        F.col("r.line_id").alias("line_id"),
-        F.col("r.word_id").alias("word_id"),
-        F.col("r.symbol_id").alias("symbol_id"),
-        F.col("r.block_type").alias("block_type"),
-        F.col("r.s_text").alias("text"),
-        F.col("r.s_conf").alias("conf"),
-        F.col("r.blanks").alias("blanks"),
-        bbox_arr.alias("bbox"),
-        F.col("r.flags").alias("flags"),
-    )
-    return cols.select(
+    return pages.select(*keep, udf(F.col("html")).alias("r")).select(
         *keep,
         F.col("r.extracted_text").alias("extracted_text"),
-        spans.alias("spans"),
+        _zip_spans(flat=False).alias("spans"),
         F.col("r.osd").alias("osd"),
         F.col("r.metrics").alias("metrics"),
     )
@@ -97,32 +99,11 @@ def extract_spans_long(
     arrays + codegen'd explode), and 4x faster than exploding the public
     nested ``spans`` column — rebuilding the bbox sub-struct per span just
     to flatten it again dominated that plan's Generate."""
-    from .udf import make_extract_columns_udf
-
     udf = make_extract_columns_udf(config)
-    cols = pages.select("url", udf(F.col("html")).alias("r"))
-    z = F.arrays_zip(
-        F.col("r.level").alias("level"),
-        F.col("r.block_id").alias("block_id"),
-        F.col("r.para_id").alias("para_id"),
-        F.col("r.line_id").alias("line_id"),
-        F.col("r.word_id").alias("word_id"),
-        F.col("r.symbol_id").alias("symbol_id"),
-        F.col("r.block_type").alias("block_type"),
-        F.col("r.s_text").alias("text"),
-        F.col("r.s_conf").alias("conf"),
-        F.col("r.blanks").alias("blanks"),
-        F.col("r.x0").alias("x0"), F.col("r.y0").alias("y0"),
-        F.col("r.x1").alias("x1"), F.col("r.y1").alias("y1"),
-        F.col("r.flags").alias("flags"),
-    )
     return (
-        cols.select("url", F.posexplode(z).alias("pos", "s"))
-        .select(
-            "url", "s.level", "s.block_id", "s.para_id", "s.line_id",
-            "s.word_id", "s.symbol_id", "s.block_type", "s.text", "s.conf",
-            "s.blanks", "s.x0", "s.y0", "s.x1", "s.y1", "s.flags",
-        )
+        pages.select("url", udf(F.col("html")).alias("r"))
+        .select("url", F.posexplode(_zip_spans(flat=True)).alias("pos", "s"))
+        .select("url", "s.*")
     )
 
 
@@ -531,12 +512,12 @@ class SparkPageAPI:
         still present (PSM.SINGLE_COLUMN view) — plus the scale factor
         (GetThresholdedImageScaleFactor, :2104-2111)."""
         from .constants import PSM
-        from .udf import make_extract_text_udf
 
-        udf = make_extract_text_udf(self.config.with_psm(PSM.SINGLE_COLUMN))
-        return self._pages.select(
+        return extract_text_only(
+            self._pages, self.config.with_psm(PSM.SINGLE_COLUMN)
+        ).select(
             "url",
-            udf(F.col("html")).alias("thresholded_text"),
+            F.col("extracted_text").alias("thresholded_text"),
             F.lit(1).alias("scale_factor"),
         )
 
@@ -602,15 +583,5 @@ def tesseract_rect(
 ) -> DataFrame:
     """TesseractRect (tesserocr/tesserocr.pyx:1670-1712): one-shot fused
     scan + region restriction + extraction -> (url, text)."""
-    from .udf import _extractor_for
-
-    cfg = config or DEFAULT_CONFIG
-    region = (left, top, width, height)
-
-    @F.pandas_udf("string")
-    def rect_text(html: pd.Series) -> pd.Series:
-        ex = _extractor_for(cfg)
-        return pd.Series([ex.extract(h, region=region).text for h in html],
-                         dtype="object")
-
-    return pages.select("url", rect_text(F.col("html")).alias("text"))
+    docs = extract_pages(pages, config, region=(left, top, width, height))
+    return docs.select("url", F.col("extracted_text").alias("text"))

@@ -4,9 +4,9 @@ This is the ProcessPages ETL driver (tesserocr/tesserocr.pyx:2253-2315)
 rebuilt for a 10^12-row table (north_rule):
 
 * **bucketing** — ``bucket = pmod(xxhash64(url), n_buckets)`` stands in for
-  Iceberg ``bucket(N, url)`` partitioning (the Iceberg runtime jar is not in
-  this sandbox; the writer is gated behind an import-try). Work, lineage and
-  resume are all keyed by this content-derived bucket.
+  Iceberg ``bucket(N, url)`` partitioning (no Iceberg runtime is assumed;
+  ``write_bucketed_table`` writes Spark's own bucketed layout). Work,
+  lineage and resume are all keyed by this content-derived bucket.
 * **salted repartition** — web corpora are host-skewed (one host can fill a
   partition); hashing the full url (not the host) plus an optional salt of
   the byte size spreads giant hosts and giant documents.
@@ -50,22 +50,6 @@ def salted_repartition(
     return pages.repartition(n_partitions, F.xxhash64("url"), salt_col)
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    """True if the Iceberg Spark runtime is on the classpath."""
-    try:
-        spark._jvm.org.apache.iceberg.Schema  # noqa: SLF001
-        return True
-    except Exception:  # noqa: BLE001
-        return False
-
-
-def write_bucketed(df: DataFrame, path: str, n_buckets: int = DEFAULT_BUCKETS) -> None:
-    """Write bucket-partitioned parquet (Iceberg fallback). With Iceberg on
-    the classpath this would be ``df.writeTo(tbl).partitionedBy(bucket(N,
-    'url')).createOrReplace()``."""
-    with_bucket(df, n_buckets).write.mode("overwrite").partitionBy("bucket").parquet(path)
-
-
 def write_bucketed_table(
     df: DataFrame,
     table: str,
@@ -75,9 +59,8 @@ def write_bucketed_table(
     """Write a Spark BUCKETED table (``bucketBy`` + ``sortBy`` on the join
     key) — the co-located-join layout for the 100 TB corpus: two tables
     bucketed the same way join with a SortMergeJoin and ZERO Exchange (no
-    shuffle, no sort). This is the shuffle-free twin of ``write_bucketed``'s
-    directory partitioning; use it for the docs↔pages / docs↔fixtures joins
-    that recur every round (the shuffle is paid once at write time)."""
+    shuffle, no sort). Use it for the docs↔pages / docs↔fixtures joins that
+    recur every round (the shuffle is paid once at write time)."""
     (
         df.write.mode("overwrite")
         .bucketBy(n_buckets, key)

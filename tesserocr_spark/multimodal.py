@@ -176,16 +176,6 @@ def parse_png(payload: bytes) -> dict | None:
     }
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    """Paeth predictor (RFC 2083 §6.6): nearest of left/up/up-left to the
-    initial estimate a + b - c, ties broken a, b, c."""
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
-
 #: Adam7 interlace pass grid (RFC 2083 §2.6): (x start, y start, x step,
 #: y step) for each of the seven passes.
 _PNG_ADAM7 = (
@@ -1210,46 +1200,46 @@ def decode_jpeg_pixels(payload: bytes) -> bytes | None:
         # 65535x65535 frame header.
         if nby * nbx * 2 > len(reader.data) * 8:
             return None
+        # one zigzag-order int32 coefficient row per block, written in place
+        # (256 B a block, so the guard above caps it at 1 KB per stream byte)
+        zz = np.zeros((nby * nbx, 64), dtype=np.int32)
         prev_dc = 0
-        mcu = 0
         rst = 0
-        zz_rows = []
-        for by in range(0, h, 8):
-            for bx in range(0, w, 8):
-                if restart_interval and mcu and mcu % restart_interval == 0:
-                    reader.restart(rst)
-                    rst = (rst + 1) & 7
-                    prev_dc = 0
-                mcu += 1
-                t = reader.read_symbol(dc_tab)
-                if t > 11:
-                    return None
-                prev_dc += _extend(reader.take(t), t)
-                zz = [0] * 64
-                zz[0] = prev_dc
-                k = 1
-                while k < 64:
-                    sym = reader.read_symbol(ac_tab)
-                    if sym == 0x00:  # EOB
-                        break
-                    run, size = sym >> 4, sym & 0x0F
-                    if size == 0:
-                        if run != 15:  # only ZRL has size 0
-                            return None
-                        k += 16
-                        continue
-                    k += run
-                    if k >= 64:
+        for mcu in range(nby * nbx):
+            if restart_interval and mcu and mcu % restart_interval == 0:
+                reader.restart(rst)
+                rst = (rst + 1) & 7
+                prev_dc = 0
+            t = reader.read_symbol(dc_tab)
+            if t > 11:
+                return None
+            prev_dc += _extend(reader.take(t), t)
+            if not -(1 << 31) <= prev_dc < 1 << 31:  # no int32 DC: malformed
+                return None
+            row = zz[mcu]
+            row[0] = prev_dc
+            k = 1
+            while k < 64:
+                sym = reader.read_symbol(ac_tab)
+                if sym == 0x00:  # EOB
+                    break
+                run, size = sym >> 4, sym & 0x0F
+                if size == 0:
+                    if run != 15:  # only ZRL has size 0
                         return None
-                    zz[k] = _extend(reader.take(size), size)
-                    k += 1
-                zz_rows.append(zz)
+                    k += 16
+                    continue
+                k += run
+                if k >= 64:
+                    return None
+                row[k] = _extend(reader.take(size), size)
+                k += 1
         # dequantize + de-zigzag + IDCT the whole block batch at once
         # (bitwise-identical to the per-block M.T @ C @ M path)
         coeff_flat = np.zeros((nby * nbx, 64))
-        coeff_flat[:, _jpeg_zigzag_flat()] = np.array(
-            zz_rows, dtype=np.int64
-        ) * np.asarray(qt, dtype=np.int64)
+        coeff_flat[:, _jpeg_zigzag_flat()] = zz.astype(np.int64) * np.asarray(
+            qt, dtype=np.int64
+        )
         out = M.T @ coeff_flat.reshape(-1, 8, 8) @ M + 128.0
         img = (
             np.clip(np.rint(out), 0, 255)

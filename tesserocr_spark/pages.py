@@ -14,7 +14,7 @@ its key — never of Spark task context):
 
 * ``synthetic_pages`` — a richer seeded corpus (multi-paragraph mains,
   Zipf-skewed hosts, tables, figures, sup/sub, entities, degenerate rows)
-  used by pytest fixtures and the scaling bench. Content derives from
+  used by pytest fixtures and the benchmark. Content derives from
   ``md5(seed, i)`` so the table is identical at any parallelism.
 """
 
@@ -44,24 +44,32 @@ _LANG3 = {"en": "eng", "de": "deu", "fr": "fra", "es": "spa", "zh": "chi_sim",
           "pt": "por", "it": "ita", "ru": "rus", "ja": "jpn", "nl": "nld"}
 
 
-def pages_from_documents(
-    spark: SparkSession, sf_dir: str, partitions: int | None = None
-) -> DataFrame:
-    """documents.parquet -> pages table, all JVM-side (zero Python per row).
+def spread(df: DataFrame) -> DataFrame:
+    """The one input-spread policy: a keyless round-robin repartition to
+    cluster parallelism when ``df`` reads fewer files than there are cores,
+    else ``df`` unchanged.
 
-    The testdata parquet is a single small file (one scan partition); a real
-    corpus table has thousands of files/buckets. Repartition to cluster
-    parallelism so the downstream extraction UDF fans out — without this the
-    whole extraction would run serially in one task.
-    """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # 1x cores (one task wave): Python-runner stages pay a serial per-task
-    # launch cost, so finer partitions LOSE outright at this input size —
-    # measured r06 at sf0.1/local[32]: spans_agg 2.14s at 4x cores, 1.23s
-    # at 2x, 0.87s at 1x, 0.97s at cores/2. With thousands of docs per
-    # task the waves are balanced by averaging; pass ``partitions``
-    # explicitly for corpora big enough that straggler smoothing matters.
-    docs = docs.repartition(partitions or spark.sparkContext.defaultParallelism)
+    The testdata parquet is ONE file, so a heavy stage straight over its
+    scan runs in a single task; a corpus table has thousands of files and
+    needs no spread. Callers pass the NARROWEST frame their heavy stage
+    needs (``doc_id`` for the codec kernels, ``(doc_id, text)`` for the
+    dedup passes): the exchange moves those bytes and no more. One task
+    per core, not more: Python-runner stages pay a serial per-task launch
+    cost, so finer partitions lose at this input size (measured r06 at
+    sf0.1/local[32]: spans_agg 2.14 s at 4x cores, 0.87 s at 1x). The file
+    count comes from the plan's file index, with no RDD built; a frame with
+    no file scan counts zero files and is spread."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    if len(df.inputFiles()) < n:
+        return df.repartition(n)
+    return df
+
+
+def pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents.parquet -> pages table, all JVM-side (zero Python per row).
+    The scan goes through ``spread`` so that the downstream extraction UDF
+    fans out over a single-file input."""
+    docs = spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     lang_map = F.create_map(*[F.lit(x) for kv in _LANG3.items() for x in kv])
     return docs.select(
         F.concat(

@@ -40,6 +40,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pages import spread
 from .registry import HASH_SQL, query, track_persist
 
 #: planted duplicates: every doc_id % 7 == 0 gets a copy at id + 100000.
@@ -65,23 +66,6 @@ candidates AS (
   FROM documents WHERE doc_id % {_PLANT_MOD} = 0
 )
 """
-
-
-def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents scan spread across cluster parallelism when the source
-    has fewer partitions: the testdata parquet is ONE file, so a query's
-    map-side stage otherwise runs serially in a single scan task. Used
-    ONLY where the per-row map work is heavy enough to pay for the
-    exchange — measured at sf0.1: the substring-dedup window fingerprints
-    gain ~2x, while the cheap minhash/simhash signature builds LOSE ~0.3s
-    to the added exchange + task overhead and keep their zero-exchange
-    single-task scan instead. A no-op at corpus scale where the input
-    already has partitions."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    n = spark.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() < n:
-        d = d.repartition(n)
-    return d
 
 
 def _candidates_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1282,10 +1266,11 @@ def dedup_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
     — a blank doc counts 1 empty word, registry docstring); md5 window
     keys; 2^32 packed (doc_id, pos) order; round(dup/total, 4) with
     float division on both engines."""
-    d = (
-        _docs_spread(spark, sf_dir)
-        .select("doc_id", F.trim("text").alias("text"))
-    )
+    # the per-window md5 fingerprints pay for the spread (~2x at sf0.1);
+    # the cheap minhash/simhash signature builds do not and read unspread
+    d = spread(
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    ).select("doc_id", F.trim("text").alias("text"))
     planted = d.select(
         "doc_id",
         F.when(

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pages import spread
 from .registry import HASH_SQL, query
 
 #: English function words used by the n-gram/stopword language heuristic.
@@ -19,21 +20,6 @@ _SQL_STOP = "', '".join(STOPWORDS)
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _fanout(spark: SparkSession, ids: DataFrame) -> DataFrame:
-    """Spread a narrow id frame across cluster parallelism when its scan
-    has fewer partitions (the testdata parquet is ONE file — without this
-    every payload-synth kernel downstream runs serially in a single
-    task). The exchange moves a few bytes of ids per row; the payload
-    bytes are synthesized and decoded AFTER it, in one stage, so they
-    still never cross the wire — shuffle the proxy, not the payload. At
-    corpus scale the input already has >= cluster-parallelism partitions
-    and this is a no-op."""
-    n = spark.sparkContext.defaultParallelism
-    if ids.rdd.getNumPartitions() < n:
-        return ids.repartition(n)
-    return ids
 
 
 @query(
@@ -659,7 +645,7 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode runs wherever the payload partition lives."""
     from ..multimodal import DECODE_SCHEMA, decode_map, synth_payload_map
 
-    d = _fanout(spark, _docs(spark, sf_dir).select("doc_id"))
+    d = spread(_docs(spark, sf_dir).select("doc_id"))
     payloads = d.mapInPandas(synth_payload_map, "doc_id bigint, payload binary")
     return payloads.mapInPandas(decode_map, DECODE_SCHEMA).select(
         "doc_id", "format", "width", "height", "bpp", "n_channels",
@@ -706,8 +692,8 @@ def multimodal_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle."""
     from ..multimodal import PIXEL_STATS_SCHEMA, pixel_stats_map, synth_payload_map
 
-    d = _fanout(spark, _docs(spark, sf_dir).select("doc_id")
-                .filter(F.col("doc_id") % 5 == 1))
+    d = spread(_docs(spark, sf_dir).select("doc_id")
+               .filter(F.col("doc_id") % 5 == 1))
     payloads = d.mapInPandas(synth_payload_map, "doc_id bigint, payload binary")
     return payloads.mapInPandas(pixel_stats_map, PIXEL_STATS_SCHEMA)
 
@@ -752,7 +738,7 @@ def multimodal_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     image-bytes ingest surface, ``tesserocr/tesserocr.pyx:1720-1750``)."""
     from ..multimodal import GIF_STATS_SCHEMA, gif_stats_map, synth_gif_map
 
-    d = _fanout(spark, _docs(spark, sf_dir).select("doc_id"))
+    d = spread(_docs(spark, sf_dir).select("doc_id"))
     payloads = d.mapInPandas(synth_gif_map, "doc_id bigint, payload binary")
     return payloads.mapInPandas(gif_stats_map, GIF_STATS_SCHEMA)
 
@@ -799,7 +785,7 @@ def multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_jpeg_full_map,
     )
 
-    d = _fanout(spark, _docs(spark, sf_dir).select("doc_id"))
+    d = spread(_docs(spark, sf_dir).select("doc_id"))
     payloads = d.mapInPandas(
         synth_jpeg_full_map, "doc_id bigint, payload binary"
     )
@@ -853,7 +839,7 @@ def multimodal_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
         tiff_stats_map,
     )
 
-    d = _fanout(spark, _docs(spark, sf_dir).select("doc_id"))
+    d = spread(_docs(spark, sf_dir).select("doc_id"))
     payloads = d.mapInPandas(synth_tiff_map, "doc_id bigint, payload binary")
     return payloads.mapInPandas(tiff_stats_map, TIFF_STATS_SCHEMA)
 
@@ -893,7 +879,7 @@ def multimodal_pnm(spark: SparkSession, sf_dir: str) -> DataFrame:
     chained narrow ``mapInPandas`` stages, no shuffle."""
     from ..multimodal import PNM_STATS_SCHEMA, pnm_stats_map, synth_pnm_map
 
-    d = _fanout(spark, _docs(spark, sf_dir).select("doc_id"))
+    d = spread(_docs(spark, sf_dir).select("doc_id"))
     payloads = d.mapInPandas(synth_pnm_map, "doc_id bigint, payload binary")
     return payloads.mapInPandas(pnm_stats_map, PNM_STATS_SCHEMA)
 
@@ -938,7 +924,7 @@ def multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     wherever the payload partition lives."""
     from ..multimodal import AUDIO_STATS_SCHEMA, audio_stats_map, synth_payload_map
 
-    d = _fanout(spark, _docs(spark, sf_dir).select("doc_id")
-                .filter(F.col("doc_id") % 5 == 0))
+    d = spread(_docs(spark, sf_dir).select("doc_id")
+               .filter(F.col("doc_id") % 5 == 0))
     payloads = d.mapInPandas(synth_payload_map, "doc_id bigint, payload binary")
     return payloads.mapInPandas(audio_stats_map, AUDIO_STATS_SCHEMA)

@@ -6,7 +6,10 @@ is a per-Python-worker lazy singleton keyed by config, reused across Arrow
 batches. Everything else (projections, aggregations, joins, windows) stays
 JVM-side.
 
-The UDF surface:
+The UDF surface, built only by the three ``api`` entry points
+(``extract_pages``, ``extract_spans_long``, ``extract_text_only``); every
+other extraction — the session's ``recognize()``, ``tesseract_rect``,
+``get_thresholded_text`` — goes through one of them:
 
 * ``make_extract_columns_udf`` — the extraction transport: spans travel as
   parallel primitive arrays and ``api.extract_pages`` re-zips them JVM-side
@@ -34,6 +37,8 @@ from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, ExtractorConfig
 from .core.extractor import Extractor
+from .schemas import EXTRACT_COLUMNS_SCHEMA
+
 
 def _as_variables_key(config: ExtractorConfig) -> tuple:
     # dataclass with a dict field is unhashable; normalize to a hashable twin
@@ -74,10 +79,6 @@ def _per_doc(fn, html: pd.Series, timeout_ms_per_doc: int, timed_out) -> list:
             gc.enable()
 
 
-_COL_NAMES = ("extracted_text", "level", "block_id", "para_id", "line_id",
-              "word_id", "symbol_id", "block_type", "blanks", "x0", "y0",
-              "x1", "y1", "flags", "s_text", "s_conf", "osd", "metrics")
-
 #: level..s_conf of a span-less document
 _EMPTY_COLS = ((),) * 15
 #: the row of a document the deadline skipped
@@ -94,9 +95,8 @@ def make_extract_columns_udf(
     ``api.extract_pages``, which re-zips the arrays into the public nested
     ``spans`` column JVM-side. ``region`` is passed to ``Extractor.extract``
     (SetRectangle)."""
-    from .schemas import EXTRACT_COLUMNS_SCHEMA
-
     cfg = config or DEFAULT_CONFIG
+    names = EXTRACT_COLUMNS_SCHEMA.names
 
     @F.pandas_udf(EXTRACT_COLUMNS_SCHEMA)
     def extract_cols(html: pd.Series) -> pd.DataFrame:
@@ -114,9 +114,9 @@ def make_extract_columns_udf(
 
         rows = _per_doc(row, html, timeout_ms_per_doc, _TIMED_OUT_ROW)
         if not rows:
-            return pd.DataFrame(columns=list(_COL_NAMES))
+            return pd.DataFrame(columns=names)
         # one column per field, not one row tuple per document
-        return pd.DataFrame(dict(zip(_COL_NAMES, zip(*rows))))
+        return pd.DataFrame(dict(zip(names, zip(*rows))))
 
     return extract_cols
 

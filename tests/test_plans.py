@@ -5,6 +5,8 @@ output so regressions fail loudly."""
 
 from __future__ import annotations
 
+import pytest
+
 from tests.conftest import SF_DIR
 
 
@@ -90,34 +92,67 @@ def test_simhash_signatures_zero_shuffle(spark):
     assert "Exchange" not in _plan(simhash_signatures(spark, SF_DIR))
 
 
-def test_substring_dedup_spreads_input_keylessly(spark):
+@pytest.fixture(scope="module")
+def many_files_dir(spark, tmp_path_factory) -> str:
+    """An sf_dir whose documents.parquet is written as >= defaultParallelism
+    files: a corpus-shaped input that the one spread policy
+    (``pages.spread``) must leave unspread."""
+    n = spark.sparkContext.defaultParallelism
+    out = tmp_path_factory.mktemp("many_files")
+    (spark.read.parquet(f"{SF_DIR}/documents.parquet").repartition(n)
+     .write.parquet(f"{out}/documents.parquet"))
+    assert len(spark.read.parquet(f"{out}/documents.parquet").inputFiles()) >= n
+    return str(out)
+
+
+def _round_robins(plan: str) -> int:
+    return plan.count("Exchange RoundRobinPartitioning")
+
+
+def test_pages_from_documents_spreads_only_few_file_input(spark, many_files_dir):
+    """The extraction input is spread round-robin to one partition per core
+    when the documents scan reads fewer files than cores, and left alone
+    when it already reads enough of them."""
+    from tesserocr_spark.pages import pages_from_documents
+
+    n = spark.sparkContext.defaultParallelism
+    plan = _plan(pages_from_documents(spark, SF_DIR))
+    assert _round_robins(plan) == 1
+    assert f"RoundRobinPartitioning({n})" in plan
+    assert _round_robins(_plan(pages_from_documents(spark, many_files_dir))) == 0
+
+
+def test_substring_dedup_spreads_input_keylessly(spark, many_files_dir):
     """The substring-dedup map stage (md5 fingerprints of every 8-word
     window) is heavy enough that the single-file testdata scan must be
     spread round-robin before it — but only keyless: the real shuffles
-    stay the gram aggregate and per-doc regroup."""
+    stay the gram aggregate and per-doc regroup. A many-file input is not
+    spread at all. (The word-array frame is persisted and its plan prints
+    once per use, so the single-file count is not exactly one.)"""
     from tesserocr_spark.queries.dedup import dedup_substrings
 
-    plan = _plan(dedup_substrings(spark, SF_DIR))
-    assert "Exchange RoundRobinPartitioning" in plan
+    assert _round_robins(_plan(dedup_substrings(spark, SF_DIR))) >= 1
+    assert _round_robins(_plan(dedup_substrings(spark, many_files_dir))) == 0
 
 
-def _assert_codec_plan_shape(plan: str, name: str) -> None:
+def _assert_codec_plan_shape(plan: str, name: str, spread: bool = True) -> None:
     """The codec-query contract: both kernels chain as two MapInPandas in
     ONE stage over a doc_id-only pruned scan, and the only Exchange the
     plan may contain is the id fan-out BELOW them — it carries nothing
     but the 8-byte doc_id, so payload bytes still never cross the wire
     (shuffle the proxy, not the payload; the fan-out exists because the
-    single-file testdata scan would otherwise run the kernels serially)."""
+    single-file testdata scan would otherwise run the kernels serially).
+    ``spread=False``: the input reads enough files, so no Exchange at all."""
     assert plan.count("MapInPandas") == 2, name
     assert "ReadSchema: struct<doc_id:bigint>" in plan, name
     n_exchanges = plan.count("Exchange ")
-    assert n_exchanges <= 1, name
+    assert n_exchanges == int(spread), name
     if n_exchanges:
         # the fan-out is a keyless round-robin of the id frame only, and it
         # sits BELOW both kernels (parents print first in toString): the
         # scan it repartitions reads nothing but doc_id, so no payload
         # column ever enters an exchange
-        assert "Exchange RoundRobinPartitioning" in plan, name
+        assert _round_robins(plan) == 1, name
         assert plan.index("MapInPandas") < plan.index("Exchange "), name
         scan_after_exchange = plan[plan.index("Exchange ") :]
         assert "FileScan parquet [doc_id#" in scan_after_exchange, name
@@ -145,10 +180,13 @@ def test_multimodal_pixels_chains_kernels_payloads_off_the_wire(spark):
     )
 
 
-def test_multimodal_codec_queries_chain_kernels_payloads_off_the_wire(spark):
+def test_multimodal_codec_queries_chain_kernels_payloads_off_the_wire(
+    spark, many_files_dir
+):
     """Every full-decode codec query (GIF LZW, baseline JPEG, multi-page
     TIFF, PNM) keeps the multimodal_pixels plan shape — payload bytes
-    never cross the wire, even for the TIFF per-page fan-out."""
+    never cross the wire, even for the TIFF per-page fan-out — and over a
+    many-file input the JPEG plan has no Exchange at all."""
     from tesserocr_spark.queries.textops import (
         multimodal_gif,
         multimodal_jpeg,
@@ -159,6 +197,10 @@ def test_multimodal_codec_queries_chain_kernels_payloads_off_the_wire(spark):
     for q in (multimodal_gif, multimodal_jpeg, multimodal_tiff,
               multimodal_pnm):
         _assert_codec_plan_shape(_plan(q(spark, SF_DIR)), q.__name__)
+    _assert_codec_plan_shape(
+        _plan(multimodal_jpeg(spark, many_files_dir)), "multimodal_jpeg",
+        spread=False,
+    )
 
 
 def test_minhash_lsh_banded_equi_join_not_allpairs(spark):

@@ -673,6 +673,34 @@ class TestContainerParserProperties:
             m is not None and len(out) == m["width"] * m["height"]
         )
 
+    @pytest.mark.parametrize("restart_interval", [0, 3])
+    def test_jpeg_every_bitflip_and_truncation_never_raises(self, restart_interval):
+        """Exhaustive hostile-bytes sweep of one small baseline JPEG, with
+        and without restart markers: every single-bit flip and every prefix
+        truncation (~3,000 decodes each) rejects or returns a frame of the
+        geometry its (possibly corrupted) SOF declares — never raises — and
+        the intact payload still decodes to its exact DC-only pixels."""
+        from tesserocr_spark.multimodal import (
+            decode_jpeg_pixels,
+            make_jpeg_baseline,
+            parse_jpeg,
+        )
+
+        px = bytes((5 * (x // 8) + 9 * (y // 8)) % 256
+                   for y in range(9) for x in range(17))
+        j = make_jpeg_baseline(17, 9, px, restart_interval=restart_interval)
+        assert decode_jpeg_pixels(j) == px
+        variants = [j[:k] for k in range(len(j))]
+        for bit in range(8 * len(j)):
+            flipped = bytearray(j)
+            flipped[bit // 8] ^= 1 << (bit % 8)
+            variants.append(bytes(flipped))
+        for v in variants:
+            out = decode_jpeg_pixels(v)
+            if out is not None:
+                m = parse_jpeg(v)
+                assert m is not None and len(out) == m["width"] * m["height"]
+
     @given(
         w=st.integers(min_value=1, max_value=40),
         h=st.integers(min_value=1, max_value=24),
