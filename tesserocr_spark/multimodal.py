@@ -3,24 +3,27 @@
 Two decode tiers:
 
 * **Real container parsing** (``parse_bmp`` / ``parse_png`` /
-  ``parse_jpeg`` / ``parse_wav`` / ``parse_mp4`` + the ``decode_map``
-  kernel): pure-Python ``struct`` parsing of the BMP BITMAPINFOHEADER, the
-  PNG chunk list (IHDR CRC-checked with stdlib ``zlib.crc32``), the JPEG
-  marker-segment walk (ITU T.81 — SOFn frame header), the RIFF/WAVE chunk
-  list, and the ISO BMFF (MP4) box tree (``moov``/``mvhd``/``trak``/
-  ``tkhd``) — fixed public layouts that need no codec dependency (mirrors
-  the reference's image-bytes ingest, ``tesserocr/tesserocr.pyx:362-369``
-  ``_image_buffer`` / ``SetImageBytes`` ``:1720-1750`` /
-  ``SetImageBytesBmp`` ``:1752-1772``).
+  ``parse_jpeg`` / ``parse_wav`` / ``parse_mp4`` / ``parse_gif`` /
+  ``parse_tiff`` / ``parse_pnm``, all eight tried by ``decode_media``
+  and the ``decode_map`` kernel): pure-Python ``struct`` parsing of
+  the BMP BITMAPINFOHEADER, the PNG chunk list (IHDR CRC-checked with
+  stdlib ``zlib.crc32``), the JPEG marker-segment walk (ITU T.81 — SOFn
+  frame header), the RIFF/WAVE chunk list, and the ISO BMFF (MP4) box
+  tree (``moov``/``mvhd``/``trak``/``tkhd``) — fixed public layouts
+  that need no codec dependency (mirrors the reference's image-bytes
+  ingest, ``tesserocr/tesserocr.pyx:362-369`` ``_image_buffer`` /
+  ``SetImageBytes`` ``:1720-1750`` / ``SetImageBytesBmp``
+  ``:1752-1772``).
   PNG is real END-TO-END: ``decode_png_pixels`` inflates the IDAT stream
   with stdlib ``zlib`` and inverts all five PNG scanline filters (None /
   Sub / Up / Average / Paeth, RFC 2083 §6) to raw pixel bytes. WAV is
   also real END-TO-END: ``decode_wav_samples`` decodes the PCM ``data``
-  chunk (8-bit unsigned / 16-bit signed LE) to sample statistics.
-  TIFF is real END-TO-END for the uncompressed baseline: ``parse_tiff``
-  walks the full multi-page IFD chain (II and MM byte orders, inline and
-  out-of-line tag values) and ``decode_tiff_pixels`` reassembles any
-  page's raster from its strips — the multi-page format the reference's
+  chunk (8-bit unsigned; 16-, 24- and 32-bit signed LE) to sample
+  statistics. TIFF is real END-TO-END for 8-bit uncompressed and
+  PackBits (Compression=32773) strips: ``parse_tiff`` walks the full
+  multi-page IFD chain (II and MM byte orders, inline and out-of-line
+  tag values) and ``decode_tiff_pixels`` reassembles any page's raster
+  from its strips — the multi-page format the reference's
   ``ProcessPages`` iterates.
   GIF is real END-TO-END with the compression implemented from scratch:
   ``parse_gif`` walks the GIF87a/89a block stream and
@@ -51,7 +54,10 @@ NULL-payload law (ADVICE r04): a missing payload is NOT the same thing as
 a zero-byte blob — ``decode_map`` emits ``format = NULL`` (all numeric
 fields 0) for SQL NULL payloads so downstream audits can tell them apart;
 the empty-blob stub law (``format='raw'``) applies only to payloads that
-are present and empty.
+are present and empty. The stats kernels give a NULL payload their
+all-zero row; ``decode_stub_map``, ``feature_extract_map`` and
+``resize_stub_map`` give it NULL fields, and ``frame_sample_map`` no
+frames.
 
 Everything Spark-side — binary column handling, Arrow batch shape,
 ``mapInPandas`` signatures, partition independence — is real and tested.
@@ -61,7 +67,8 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from functools import partial
 
 import pandas as pd
 
@@ -1690,6 +1697,81 @@ def decode_media(payload: bytes) -> dict:
     }
 
 
+# -- mapInPandas kernel shells ------------------------------------------------
+# Every kernel below is one call of ``_per_payload`` or ``_synth``: the
+# per-batch loop, the NULL handling and the DataFrame build exist once, and
+# a codec supplies only how one doc_id becomes a payload (``make``) or how
+# one payload becomes output rows (``rows_of``).
+
+
+def _names(schema: str) -> list[str]:
+    """Column names of a DDL schema string such as ``DECODE_SCHEMA``."""
+    return [c.split()[0] for c in schema.split(", ")]
+
+
+def _per_payload(
+    batches: Iterator[pd.DataFrame],
+    columns: list[str],
+    rows_of: Callable[[int, bytes | None], list[tuple]],
+) -> Iterator[pd.DataFrame]:
+    """The (doc_id, payload:binary) batch loop: ``rows_of(doc_id, payload)``
+    gives one payload's output rows, doc_id first, in ``columns`` order. A
+    SQL NULL payload reaches it as None, any other as ``bytes``."""
+    for pdf in batches:
+        rows: list[tuple] = []
+        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+            rows += rows_of(doc_id, None if payload is None else bytes(payload))
+        yield pd.DataFrame(rows, columns=columns)
+
+
+def _synth(
+    batches: Iterator[pd.DataFrame], make: Callable[[int], bytes]
+) -> Iterator[pd.DataFrame]:
+    """The doc_id -> (doc_id, payload) batch loop: ``make(i)`` builds the
+    payload of doc_id ``i``."""
+    for pdf in batches:
+        yield pd.DataFrame({
+            "doc_id": pdf["doc_id"].values,
+            "payload": [make(int(i)) for i in pdf["doc_id"]],
+        })
+
+
+def _px_stats(px: bytes) -> tuple[int, int, int]:
+    """(count, sum, index-weighted sum) of a decoded raster's bytes. The
+    weighted sum is order-sensitive, so a row-order, de-interlace or
+    run-length defect cannot hide in the order-invariant total."""
+    import numpy as np
+
+    arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+    return len(px), int(arr.sum()), int(arr @ np.arange(len(arr), dtype=np.int64))
+
+
+def _header_stats(names: list[str], meta: dict | None, px: bytes | None) -> tuple:
+    """Values for the columns ``names``: the header fields before ``n_px``
+    read from ``meta``, then as many of ``_px_stats(px)`` as the names ask
+    for. All zeros when the payload did not decode (``px`` None): one bad
+    blob yields a zero row instead of failing the scan."""
+    if px is None:
+        return (0,) * len(names)
+    k = names.index("n_px")
+    return (*(meta[f] for f in names[:k]), *_px_stats(px)[: len(names) - k])
+
+
+def _image_rows(
+    columns: list[str],
+    parse: Callable[[bytes], dict | None],
+    decode: Callable[[bytes], bytes | None],
+    doc_id: int,
+    payload: bytes | None,
+) -> list[tuple]:
+    """``rows_of`` for a one-raster codec: one row of header fields and
+    raster stats, all zero unless both ``parse`` and ``decode`` accept the
+    payload."""
+    meta = None if payload is None else parse(payload)
+    px = decode(payload) if meta else None
+    return [(doc_id, *_header_stats(columns[1:], meta, px))]
+
+
 DECODE_SCHEMA = (
     "doc_id bigint, format string, width int, height int, bpp int, "
     "n_channels int, sample_rate int, n_frames int, n_bytes bigint"
@@ -1705,21 +1787,21 @@ _NULL_META = {
 }
 
 
+def _decode_rows(
+    columns: list[str], doc_id: int, payload: bytes | None
+) -> list[tuple]:
+    meta = _NULL_META if payload is None else decode_media(payload)
+    return [(doc_id, *(meta[c] for c in columns[1:]))]
+
+
 def decode_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas kernel: (doc_id, payload:binary) -> DECODE_SCHEMA rows
-    via the real BMP/PNG/JPEG/WAV parsers with stub fallback. NULL payloads
-    (normal in a binary column at corpus scale) emit ``format = NULL``
-    rather than the empty-blob stub — a scan never dies on one, and audits
-    can count them."""
-    cols = [c.split()[0] for c in DECODE_SCHEMA.split(", ")]
-    for pdf in batches:
-        metas = [
-            decode_media(bytes(p)) if p is not None else _NULL_META
-            for p in pdf["payload"]
-        ]
-        out = pd.DataFrame(metas, columns=cols[1:])
-        out.insert(0, "doc_id", pdf["doc_id"].values)
-        yield out
+    via ``decode_media`` (all eight container parsers, stub fallback).
+    NULL payloads (normal in a binary column at corpus scale) emit
+    ``format = NULL`` rather than the empty-blob stub — a scan never dies
+    on one, and audits can count them."""
+    cols = _names(DECODE_SCHEMA)
+    return _per_payload(batches, cols, partial(_decode_rows, cols))
 
 
 def make_bmp(width: int, height: int, bpp: int = 24, fill: int = 0) -> bytes:
@@ -2007,6 +2089,19 @@ def make_pnm(width: int, height: int, kind: int = 6) -> bytes:
     return header + raster
 
 
+def _mixed_payload(i: int) -> bytes:
+    if i % 5 == 0:
+        v = (i % 7) % 2
+        return make_wav(1 + v, 8000 + (i % 7) * 1000, 8 + v * 8, 100 + i % 50)
+    if i % 5 == 1:
+        return make_png(1 + i % 48, 1 + i % 24, 2, interlace=bool(i % 2))
+    if i % 5 == 2:
+        return make_bmp(1 + i % 64, 1 + i % 32, 24, i % 256)
+    if i % 5 == 3:
+        return make_jpeg(1 + i % 40, 1 + i % 20, 1 if i % 8 == 3 else 3)
+    return make_mp4(16 + i % 64, 16 + i % 48, 600, 600 + i % 400, 1 + i % 3)
+
+
 def synth_payload_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas kernel: doc_id -> deterministic real container bytes
     (WAV for doc_id % 5 == 0, filtered+deflated RGB PNG for % 5 == 1,
@@ -2015,34 +2110,7 @@ def synth_payload_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
     predicts the header fields arithmetically from doc_id. WAV channel/bit
     variants key on ``i % 7`` (coprime to the 5-cycle, so both variants
     occur); JPEG alternates grayscale/RGB on ``i % 8``."""
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            i = int(doc_id)
-            if i % 5 == 0:
-                v = (i % 7) % 2
-                payloads.append(
-                    make_wav(1 + v, 8000 + (i % 7) * 1000, 8 + v * 8,
-                             100 + i % 50)
-                )
-            elif i % 5 == 1:
-                payloads.append(
-                    make_png(1 + i % 48, 1 + i % 24, 2,
-                             interlace=bool(i % 2))
-                )
-            elif i % 5 == 2:
-                payloads.append(make_bmp(1 + i % 64, 1 + i % 32, 24, i % 256))
-            elif i % 5 == 3:
-                payloads.append(
-                    make_jpeg(1 + i % 40, 1 + i % 20,
-                              1 if i % 8 == 3 else 3)
-                )
-            else:
-                payloads.append(
-                    make_mp4(16 + i % 64, 16 + i % 48, 600,
-                             600 + i % 400, 1 + i % 3)
-                )
-        yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
+    return _synth(batches, _mixed_payload)
 
 
 PIXEL_STATS_SCHEMA = (
@@ -2058,23 +2126,10 @@ def pixel_stats_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     order-sensitive so a pass-scatter defect cannot hide in the
     order-invariant total. Non-PNG / out-of-subset payloads report zeros
     instead of failing the scan."""
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            px = decode_png_pixels(bytes(payload)) if payload is not None else None
-            if px is None:
-                rows.append((doc_id, 0, 0, 0))
-            else:
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append((
-                    doc_id, len(px), int(arr.sum()),
-                    int((arr * np.arange(len(arr), dtype=np.int64)).sum()),
-                ))
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "n_px", "pix_sum", "pix_wsum"]
-        )
+    cols = _names(PIXEL_STATS_SCHEMA)
+    return _per_payload(
+        batches, cols, partial(_image_rows, cols, parse_png, decode_png_pixels)
+    )
 
 
 GIF_STATS_SCHEMA = (
@@ -2088,15 +2143,9 @@ def synth_gif_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     (``make_gif(1 + i % 32, 1 + i % 16)``, default gradient indices;
     INTERLACED storage for odd doc_id — display pixels identical) — the
     payload source for the ``multimodal_gif`` oracle query."""
-    for pdf in batches:
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"].values,
-            "payload": [
-                make_gif(1 + int(i) % 32, 1 + int(i) % 16,
-                         interlace=bool(int(i) % 2))
-                for i in pdf["doc_id"]
-            ],
-        })
+    return _synth(
+        batches, lambda i: make_gif(1 + i % 32, 1 + i % 16, interlace=bool(i % 2))
+    )
 
 
 def gif_stats_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2107,34 +2156,32 @@ def gif_stats_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     order-invariant ``pix_sum`` would not. Non-GIF / malformed payloads
     report all-zero rather than failing the scan — same never-dies law as
     ``pixel_stats_map``."""
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            b = bytes(payload) if payload is not None else b""
-            meta = parse_gif(b)
-            px = decode_gif_pixels(b) if meta else None
-            if meta is None or px is None:
-                rows.append((doc_id, 0, 0, 0, 0, 0, 0))
-            else:
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                rows.append((
-                    doc_id, meta["width"], meta["height"], meta["n_frames"],
-                    len(px), int(arr.sum()),
-                    int(arr @ np.arange(len(arr), dtype=np.int64)),
-                ))
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "width", "height", "n_frames", "n_px",
-                     "pix_sum", "pix_wsum"],
-        )
+    cols = _names(GIF_STATS_SCHEMA)
+    return _per_payload(
+        batches, cols, partial(_image_rows, cols, parse_gif, decode_gif_pixels)
+    )
 
 
 JPEG_STATS_SCHEMA = (
     "doc_id bigint, width int, height int, n_channels int, "
     "n_px bigint, pix_sum bigint"
 )
+
+
+def _block_jpeg(i: int) -> bytes:
+    import numpy as np
+
+    w, h = 1 + i % 48, 1 + i % 24
+    # (5*(x//8) + 9*(y//8) + i) % 256 rasterized in one outer sum
+    px = (
+        (
+            (np.arange(h, dtype=np.int64)[:, None] // 8) * 9
+            + (np.arange(w, dtype=np.int64)[None, :] // 8) * 5
+            + i
+        )
+        % 256
+    ).astype(np.uint8).tobytes()
+    return make_jpeg_baseline(w, h, px, restart_interval=3 if i % 2 else 0)
 
 
 def synth_jpeg_full_map(
@@ -2148,29 +2195,7 @@ def synth_jpeg_full_map(
     doc_ids carry restart markers every 3 MCUs (DRI + cyclic RSTm) —
     decoded pixels identical, so the oracle also locks the restart path
     (a DC-predictor-reset defect shifts the sums)."""
-    import numpy as np
-
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            i = int(doc_id)
-            w, h = 1 + i % 48, 1 + i % 24
-            # (5*(x//8) + 9*(y//8) + i) % 256 rasterized in one outer sum
-            px = (
-                (
-                    (np.arange(h, dtype=np.int64)[:, None] // 8) * 9
-                    + (np.arange(w, dtype=np.int64)[None, :] // 8) * 5
-                    + i
-                )
-                % 256
-            ).astype(np.uint8).tobytes()
-            payloads.append(
-                make_jpeg_baseline(w, h, px,
-                                   restart_interval=3 if i % 2 else 0)
-            )
-        yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"].values, "payload": payloads}
-        )
+    return _synth(batches, _block_jpeg)
 
 
 def jpeg_stats_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2178,24 +2203,10 @@ def jpeg_stats_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     + full-pixel-decode stats via ``parse_jpeg`` / ``decode_jpeg_pixels``
     (Huffman + dequant + IDCT). Non-JPEG / out-of-subset payloads report
     all-zero — never-dies law."""
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            b = bytes(payload) if payload is not None else b""
-            meta = parse_jpeg(b)
-            px = decode_jpeg_pixels(b) if meta else None
-            if meta is None or px is None:
-                rows.append((doc_id, 0, 0, 0, 0, 0))
-            else:
-                rows.append((
-                    doc_id, meta["width"], meta["height"],
-                    meta["n_channels"], len(px), sum(px),
-                ))
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "width", "height", "n_channels", "n_px",
-                     "pix_sum"],
-        )
+    cols = _names(JPEG_STATS_SCHEMA)
+    return _per_payload(
+        batches, cols, partial(_image_rows, cols, parse_jpeg, decode_jpeg_pixels)
+    )
 
 
 TIFF_STATS_SCHEMA = (
@@ -2210,15 +2221,22 @@ def synth_tiff_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     with per-page gradient rasters; PACKBITS-compressed strips for odd
     doc_id (decoded rasters identical) — the payload source for the
     ``multimodal_tiff`` oracle query."""
-    for pdf in batches:
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"].values,
-            "payload": [
-                make_tiff(1 + int(i) % 24, 1 + int(i) % 16, 1 + int(i) % 4,
-                          compression=32773 if int(i) % 2 else 1)
-                for i in pdf["doc_id"]
-            ],
-        })
+    return _synth(batches, lambda i: make_tiff(
+        1 + i % 24, 1 + i % 16, 1 + i % 4, compression=32773 if i % 2 else 1
+    ))
+
+
+def _tiff_rows(
+    columns: list[str], doc_id: int, payload: bytes | None
+) -> list[tuple]:
+    meta = None if payload is None else parse_tiff(payload)
+    if meta is None:
+        return [(doc_id, 0, *_header_stats(columns[2:], None, None))]
+    return [
+        # parse_tiff already validated the chain: decode each page directly
+        (doc_id, p, *_header_stats(columns[2:], meta, _decode_tiff_page(payload, p)))
+        for p in range(meta["n_frames"])
+    ]
 
 
 def tiff_stats_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2228,32 +2246,8 @@ def tiff_stats_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     each raster byte by its linear index so a PackBits run-length defect
     that preserves totals still mismatches. Non-TIFF / malformed
     payloads emit a single all-zero row (never-dies law)."""
-    import numpy as np
-
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            b = bytes(payload) if payload is not None else b""
-            meta = parse_tiff(b)
-            if meta is None:
-                rows.append((doc_id, 0, 0, 0, 0, 0, 0, 0))
-                continue
-            for p in range(meta["n_frames"]):
-                px = _decode_tiff_page(b, p)  # meta: chain already valid
-                if px is None:
-                    rows.append((doc_id, p, 0, 0, 0, 0, 0, 0))
-                else:
-                    arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                    rows.append((
-                        doc_id, p, meta["width"], meta["height"],
-                        meta["n_frames"], len(px), int(arr.sum()),
-                        int(arr @ np.arange(len(arr), dtype=np.int64)),
-                    ))
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "page", "width", "height", "n_frames",
-                     "n_px", "pix_sum", "pix_wsum"],
-        )
+    cols = _names(TIFF_STATS_SCHEMA)
+    return _per_payload(batches, cols, partial(_tiff_rows, cols))
 
 
 PNM_STATS_SCHEMA = (
@@ -2267,39 +2261,19 @@ def synth_pnm_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     P5 graymap for doc_id % 3 == 0 else P6 pixmap, dimensions
     ``(1 + i % 40) × (1 + i % 20)`` — the payload source for the
     ``multimodal_pnm`` oracle query."""
-    for pdf in batches:
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"].values,
-            "payload": [
-                make_pnm(1 + int(i) % 40, 1 + int(i) % 20,
-                         5 if int(i) % 3 == 0 else 6)
-                for i in pdf["doc_id"]
-            ],
-        })
+    return _synth(
+        batches, lambda i: make_pnm(1 + i % 40, 1 + i % 20, 5 if i % 3 == 0 else 6)
+    )
 
 
 def pnm_stats_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas kernel: (doc_id, payload:binary) -> PNM header fields +
     full-raster pixel stats via ``parse_pnm`` / ``decode_pnm_pixels``.
     Non-PNM / malformed payloads report all-zero — never-dies law."""
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            b = bytes(payload) if payload is not None else b""
-            meta = parse_pnm(b)
-            px = decode_pnm_pixels(b) if meta else None
-            if meta is None or px is None:
-                rows.append((doc_id, 0, 0, 0, 0, 0))
-            else:
-                rows.append((
-                    doc_id, meta["width"], meta["height"],
-                    meta["n_channels"], len(px), sum(px),
-                ))
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "width", "height", "n_channels", "n_px",
-                     "pix_sum"],
-        )
+    cols = _names(PNM_STATS_SCHEMA)
+    return _per_payload(
+        batches, cols, partial(_image_rows, cols, parse_pnm, decode_pnm_pixels)
+    )
 
 
 def decode_wav_samples(payload: bytes) -> tuple[int, int] | None:
@@ -2348,42 +2322,64 @@ def decode_wav_samples(payload: bytes) -> tuple[int, int] | None:
 AUDIO_STATS_SCHEMA = "doc_id bigint, n_samples bigint, amp_sum bigint"
 
 
+def _wav_rows(doc_id: int, payload: bytes | None) -> list[tuple]:
+    st = None if payload is None else decode_wav_samples(payload)
+    return [(doc_id, *(st or (0, 0)))]
+
+
 def audio_stats_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas kernel: (doc_id, payload:binary) -> full-PCM-decode
     stats (sample count + amplitude sum) via ``decode_wav_samples``.
     Non-WAV / out-of-subset payloads report (0, 0) instead of failing the
     scan — same never-dies law as ``pixel_stats_map``."""
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            st = decode_wav_samples(bytes(payload)) if payload is not None else None
-            rows.append((doc_id, st[0], st[1]) if st else (doc_id, 0, 0))
-        yield pd.DataFrame(rows, columns=["doc_id", "n_samples", "amp_sum"])
+    return _per_payload(batches, _names(AUDIO_STATS_SCHEMA), _wav_rows)
+
+
+def _stub_rows(doc_id: int, payload: bytes | None) -> list[tuple]:
+    if payload is None:
+        return [(doc_id, None, None, None)]
+    m = _decode_one(payload)
+    return [(doc_id, m["n_bytes"], m["fake_width"], m["n_frames"])]
 
 
 def decode_stub_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: (doc_id, payload:binary) -> decoded metadata."""
-    for pdf in batches:
-        metas = [_decode_one(p) for p in pdf["payload"]]
-        out = pd.DataFrame(metas)
-        out.insert(0, "doc_id", pdf["doc_id"].values)
-        yield out
+    """mapInPandas kernel: (doc_id, payload:binary) -> decoded metadata;
+    a NULL payload gets NULL fields."""
+    return _per_payload(
+        batches, ["doc_id", "n_bytes", "fake_width", "n_frames"], _stub_rows
+    )
+
+
+def _frame_rows(doc_id: int, payload: bytes | None) -> list[tuple]:
+    if payload is None:
+        return []
+    return [
+        (doc_id, f, payload[f::7][:16])
+        for f in range(_decode_one(payload)["n_frames"])
+    ]
 
 
 def frame_sample_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas kernel: explode each payload into its sampled 'frames'
     (one row per frame) — the fan-out shape a video pipeline needs.
-    Frame payloads are stubbed as byte slices."""
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            meta = _decode_one(payload)
-            for f in range(meta["n_frames"]):
-                chunk = bytes(payload[f::7][:16])
-                rows.append((doc_id, f, chunk))
-        yield pd.DataFrame(rows, columns=["doc_id", "frame_id", "frame_bytes"])
+    Frame payloads are stubbed as byte slices; a NULL payload has no
+    frames."""
+    return _per_payload(
+        batches, ["doc_id", "frame_id", "frame_bytes"], _frame_rows
+    )
+
 
 N_FEATURES = 16
+
+
+def _feature_rows(doc_id: int, payload: bytes | None) -> list[tuple]:
+    if payload is None:
+        return [(doc_id, None)]
+    hist = [0] * N_FEATURES
+    for b in payload:
+        hist[b >> 4] += 1
+    n = max(1, len(payload))
+    return [(doc_id, [c / n for c in hist])]
 
 
 def feature_extract_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2391,16 +2387,21 @@ def feature_extract_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     vector. Unlike the decode stub this is REAL: a normalized 16-bin byte
     histogram is a legitimate content feature (usable for embedding-style
     similarity) and needs no codec. Output column ``features`` is
-    array<double> of length N_FEATURES, partition-independent."""
-    for pdf in batches:
-        feats = []
-        for payload in pdf["payload"]:
-            hist = [0] * N_FEATURES
-            for b in payload:
-                hist[b >> 4] += 1
-            n = max(1, len(payload))
-            feats.append([c / n for c in hist])
-        yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "features": feats})
+    array<double> of length N_FEATURES, partition-independent; NULL for a
+    NULL payload."""
+    return _per_payload(batches, ["doc_id", "features"], _feature_rows)
+
+
+def _resize_rows(
+    target_width: int, doc_id: int, payload: bytes | None
+) -> list[tuple]:
+    if payload is None:
+        return [(doc_id, None, None, None)]
+    src_w = max(1, _decode_one(payload)["fake_width"])
+    scale = min(1.0, target_width / src_w)
+    step = max(1, int(round(1 / scale)) if scale < 1 else 1)
+    resized = payload[::step]
+    return [(doc_id, min(src_w, target_width), len(resized), resized)]
 
 
 def resize_stub_map(
@@ -2410,22 +2411,13 @@ def resize_stub_map(
     payload + new geometry. The pixel resample itself needs an image codec
     and is STUBBED as a deterministic byte subsample proportional to the
     scale factor; the Spark plumbing (closure parameterization, binary in /
-    binary out, metadata columns) is the real shape a resize stage has."""
+    binary out, metadata columns) is the real shape a resize stage has. A
+    NULL payload gets NULL width, size and payload."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                meta = _decode_one(payload)
-                src_w = max(1, meta["fake_width"])
-                scale = min(1.0, target_width / src_w)
-                step = max(1, int(round(1 / scale)) if scale < 1 else 1)
-                resized = bytes(payload[::step])
-                rows.append(
-                    (doc_id, min(src_w, target_width), len(resized), resized)
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "n_bytes", "payload"]
-            )
+        return _per_payload(
+            batches, ["doc_id", "width", "n_bytes", "payload"],
+            partial(_resize_rows, target_width),
+        )
 
     return kernel

@@ -183,14 +183,8 @@ _PERM = (
     "% 2147483647"
 )
 
-_MINHASH_EXPR = (
-    f"transform(sequence(0, {_N_HASHES - 1}), b -> named_struct("
-    "'band', cast(b as int), "
-    f"'minhash', array_min(transform(h31, h -> {_PERM}))))"
-)
-
-#: same 8 minhashes as _MINHASH_EXPR but as a plain array (index = band) —
-#: the shape the banded LSH key construction needs.
+#: the 8 minhashes as a plain array, index = band: ``minhash_signatures``
+#: posexplodes it and the banded LSH key construction indexes it.
 _MINHASH_ARRAY_EXPR = (
     f"transform(sequence(0, {_N_HASHES - 1}), "
     f"b -> array_min(transform(h31, h -> {_PERM})))"
@@ -215,22 +209,6 @@ _BAND_KEYS_EXPR = (
 )
 
 _H31_EXPR = "transform(sh, s -> " + _HASH.format(x="s") + " % cast(2147483648 as bigint))"
-
-
-def _minhash_signatures_from(sh: DataFrame) -> DataFrame:
-    """(doc_id, band, minhash) from a shingle-array frame. The whole
-    signature computation is one narrow projection; the first (and only)
-    shuffles in any minhash query are downstream, keyed on the LSH buckets."""
-    return (
-        sh.filter(F.size("sh") > 0)
-        .select("doc_id", F.expr(_H31_EXPR).alias("h31"))
-        .select("doc_id", F.explode(F.expr(_MINHASH_EXPR)).alias("x"))
-        .select("doc_id", "x.band", "x.minhash")
-    )
-
-
-def _minhash_signatures(cand: DataFrame) -> DataFrame:
-    return _minhash_signatures_from(_shingle_array(cand))
 
 
 def _shingle_hashes(cand: DataFrame) -> DataFrame:
@@ -275,9 +253,14 @@ WITH {_SQL_CANDIDATES_NEAR}, {_SQL_SHINGLES.rstrip()}
 SELECT doc_id, CAST(band AS INT) AS band, minhash FROM hashes""",
 )
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash signatures (8 hash functions over 3-word shingles)."""
-    return _minhash_signatures(_candidates_near(spark, sf_dir)).select(
-        "doc_id", F.col("band").cast("int").alias("band"), "minhash"
+    """MinHash signatures (8 hash functions over 3-word shingles), one row
+    per band: the LSH path's two persisted frames, the signature array
+    posexploded. That array frame is persisted too because posexplode
+    makes the optimizer add a ``size(mh) > 0`` filter, which would
+    otherwise recompute every minhash."""
+    sh = track_persist(_shingle_hashes(_candidates_near(spark, sf_dir)))
+    return track_persist(_minhash_array(sh)).select(
+        "doc_id", F.posexplode("mh").alias("band", "minhash")
     )
 
 

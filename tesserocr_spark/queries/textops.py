@@ -22,6 +22,20 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
+def _codec_query(
+    spark: SparkSession, sf_dir: str, synth, stats, schema: str,
+    residue: int | None = None,
+) -> DataFrame:
+    """The chain every full-decode codec query runs: spread the doc_ids
+    (only ``doc_id % 5 == residue`` when given), ``synth`` one payload per
+    doc_id, ``stats`` it to ``schema`` rows. Only doc_ids are shuffled."""
+    d = _docs(spark, sf_dir).select("doc_id")
+    if residue is not None:
+        d = d.filter(F.col("doc_id") % 5 == residue)
+    payloads = spread(d).mapInPandas(synth, "doc_id bigint, payload binary")
+    return payloads.mapInPandas(stats, schema)
+
+
 @query(
     "langid_heuristic",
     oracle=f"""
@@ -645,9 +659,9 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode runs wherever the payload partition lives."""
     from ..multimodal import DECODE_SCHEMA, decode_map, synth_payload_map
 
-    d = spread(_docs(spark, sf_dir).select("doc_id"))
-    payloads = d.mapInPandas(synth_payload_map, "doc_id bigint, payload binary")
-    return payloads.mapInPandas(decode_map, DECODE_SCHEMA).select(
+    return _codec_query(
+        spark, sf_dir, synth_payload_map, decode_map, DECODE_SCHEMA
+    ).select(
         "doc_id", "format", "width", "height", "bpp", "n_channels",
         "sample_rate", "n_frames"
     )
@@ -692,10 +706,8 @@ def multimodal_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle."""
     from ..multimodal import PIXEL_STATS_SCHEMA, pixel_stats_map, synth_payload_map
 
-    d = spread(_docs(spark, sf_dir).select("doc_id")
-               .filter(F.col("doc_id") % 5 == 1))
-    payloads = d.mapInPandas(synth_payload_map, "doc_id bigint, payload binary")
-    return payloads.mapInPandas(pixel_stats_map, PIXEL_STATS_SCHEMA)
+    return _codec_query(spark, sf_dir, synth_payload_map, pixel_stats_map,
+                        PIXEL_STATS_SCHEMA, residue=1)
 
 
 @query(
@@ -738,9 +750,8 @@ def multimodal_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     image-bytes ingest surface, ``tesserocr/tesserocr.pyx:1720-1750``)."""
     from ..multimodal import GIF_STATS_SCHEMA, gif_stats_map, synth_gif_map
 
-    d = spread(_docs(spark, sf_dir).select("doc_id"))
-    payloads = d.mapInPandas(synth_gif_map, "doc_id bigint, payload binary")
-    return payloads.mapInPandas(gif_stats_map, GIF_STATS_SCHEMA)
+    return _codec_query(spark, sf_dir, synth_gif_map, gif_stats_map,
+                        GIF_STATS_SCHEMA)
 
 
 @query(
@@ -785,11 +796,8 @@ def multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_jpeg_full_map,
     )
 
-    d = spread(_docs(spark, sf_dir).select("doc_id"))
-    payloads = d.mapInPandas(
-        synth_jpeg_full_map, "doc_id bigint, payload binary"
-    )
-    return payloads.mapInPandas(jpeg_stats_map, JPEG_STATS_SCHEMA)
+    return _codec_query(spark, sf_dir, synth_jpeg_full_map, jpeg_stats_map,
+                        JPEG_STATS_SCHEMA)
 
 
 @query(
@@ -839,9 +847,8 @@ def multimodal_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
         tiff_stats_map,
     )
 
-    d = spread(_docs(spark, sf_dir).select("doc_id"))
-    payloads = d.mapInPandas(synth_tiff_map, "doc_id bigint, payload binary")
-    return payloads.mapInPandas(tiff_stats_map, TIFF_STATS_SCHEMA)
+    return _codec_query(spark, sf_dir, synth_tiff_map, tiff_stats_map,
+                        TIFF_STATS_SCHEMA)
 
 
 @query(
@@ -879,9 +886,8 @@ def multimodal_pnm(spark: SparkSession, sf_dir: str) -> DataFrame:
     chained narrow ``mapInPandas`` stages, no shuffle."""
     from ..multimodal import PNM_STATS_SCHEMA, pnm_stats_map, synth_pnm_map
 
-    d = spread(_docs(spark, sf_dir).select("doc_id"))
-    payloads = d.mapInPandas(synth_pnm_map, "doc_id bigint, payload binary")
-    return payloads.mapInPandas(pnm_stats_map, PNM_STATS_SCHEMA)
+    return _codec_query(spark, sf_dir, synth_pnm_map, pnm_stats_map,
+                        PNM_STATS_SCHEMA)
 
 
 @query(
@@ -924,7 +930,5 @@ def multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     wherever the payload partition lives."""
     from ..multimodal import AUDIO_STATS_SCHEMA, audio_stats_map, synth_payload_map
 
-    d = spread(_docs(spark, sf_dir).select("doc_id")
-               .filter(F.col("doc_id") % 5 == 0))
-    payloads = d.mapInPandas(synth_payload_map, "doc_id bigint, payload binary")
-    return payloads.mapInPandas(audio_stats_map, AUDIO_STATS_SCHEMA)
+    return _codec_query(spark, sf_dir, synth_payload_map, audio_stats_map,
+                        AUDIO_STATS_SCHEMA, residue=0)

@@ -184,10 +184,11 @@ def test_multimodal_codec_queries_chain_kernels_payloads_off_the_wire(
     spark, many_files_dir
 ):
     """Every full-decode codec query (GIF LZW, baseline JPEG, multi-page
-    TIFF, PNM) keeps the multimodal_pixels plan shape — payload bytes
-    never cross the wire, even for the TIFF per-page fan-out — and over a
-    many-file input the JPEG plan has no Exchange at all."""
+    TIFF, PNM, PCM audio) keeps the multimodal_pixels plan shape — payload
+    bytes never cross the wire, even for the TIFF per-page fan-out — and
+    over a many-file input the JPEG plan has no Exchange at all."""
     from tesserocr_spark.queries.textops import (
+        multimodal_audio,
         multimodal_gif,
         multimodal_jpeg,
         multimodal_pnm,
@@ -195,7 +196,7 @@ def test_multimodal_codec_queries_chain_kernels_payloads_off_the_wire(
     )
 
     for q in (multimodal_gif, multimodal_jpeg, multimodal_tiff,
-              multimodal_pnm):
+              multimodal_pnm, multimodal_audio):
         _assert_codec_plan_shape(_plan(q(spark, SF_DIR)), q.__name__)
     _assert_codec_plan_shape(
         _plan(multimodal_jpeg(spark, many_files_dir)), "multimodal_jpeg",
@@ -217,15 +218,19 @@ def test_minhash_lsh_hashes_each_shingle_once(spark):
     """Each shingle's md5 base hash is computed once, in the persisted
     shingle frame — never under the per-band minhash projection, where
     CollapseProject would inline it into all 8 band lambdas and hash every
-    shingle once per band."""
-    from tesserocr_spark.queries.dedup import dedup_minhash_lsh
+    shingle once per band. Holds for the signature rows too."""
+    from tesserocr_spark.queries.dedup import (
+        dedup_minhash_lsh,
+        minhash_signatures,
+    )
 
-    df = dedup_minhash_lsh(spark, SF_DIR)
-    opt = df._jdf.queryExecution().optimizedPlan().toString()
-    minhash = [ln for ln in opt.splitlines() if "array_min(" in ln]
-    assert minhash, "no minhash projection in the optimized plan"
-    assert not [ln for ln in minhash if "md5(" in ln]
-    assert "md5(" in opt  # the base hash still exists, once, below the cache
+    for q in (dedup_minhash_lsh, minhash_signatures):
+        opt = q(spark, SF_DIR)._jdf.queryExecution().optimizedPlan().toString()
+        minhash = [ln for ln in opt.splitlines() if "array_min(" in ln]
+        assert minhash, f"{q.__name__}: no minhash projection in the plan"
+        assert not [ln for ln in minhash if "md5(" in ln], q.__name__
+        # the base hash still exists, once, below the cache
+        assert "md5(" in opt, q.__name__
 
 
 def test_simhash_pairs_use_equi_join_not_allpairs(spark):

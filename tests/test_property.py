@@ -701,6 +701,44 @@ class TestContainerParserProperties:
                 m = parse_jpeg(v)
                 assert m is not None and len(out) == m["width"] * m["height"]
 
+    @pytest.mark.parametrize("codec", ["png", "gif", "tiff", "pnm", "wav"])
+    def test_stats_kernel_every_bitflip_and_truncation_keeps_row_law(
+        self, codec
+    ):
+        """Exhaustive hostile-bytes sweep of each other decoding stats
+        kernel: one small fixture, every prefix truncation and every
+        single-bit flip, all in one batch. The kernel never raises and
+        emits exactly one row per payload (TIFF: at least one, one per
+        page), and the intact fixture still decodes."""
+        import pandas as pd
+
+        from tesserocr_spark import multimodal as mm
+
+        kernel, good = {
+            "png": (mm.pixel_stats_map, mm.make_png(5, 3, interlace=True)),
+            "gif": (mm.gif_stats_map, mm.make_gif(5, 3, interlace=True)),
+            "tiff": (mm.tiff_stats_map,
+                     mm.make_tiff(5, 3, 2, rows_per_strip=2,
+                                  compression=32773)),
+            "pnm": (mm.pnm_stats_map, mm.make_pnm(5, 3)),
+            "wav": (mm.audio_stats_map, mm.make_wav(2, 8000, 16, 9)),
+        }[codec]
+        variants = [good] + [good[:k] for k in range(len(good))]
+        for bit in range(8 * len(good)):
+            flipped = bytearray(good)
+            flipped[bit // 8] ^= 1 << (bit % 8)
+            variants.append(bytes(flipped))
+        batch = pd.DataFrame({
+            "doc_id": pd.Series(range(len(variants)), dtype="int64"),
+            "payload": variants,
+        })
+        out = pd.concat(list(kernel(iter([batch]))))
+        per_doc = out.doc_id.value_counts()
+        assert sorted(per_doc.index) == list(range(len(variants)))
+        assert (per_doc >= 1).all() if codec == "tiff" else (per_doc == 1).all()
+        intact = out[out.doc_id == 0].drop(columns="doc_id")
+        assert (intact.values != 0).any(axis=1).all()
+
     @given(
         w=st.integers(min_value=1, max_value=40),
         h=st.integers(min_value=1, max_value=24),
