@@ -13,18 +13,13 @@ DataFrame query over the exploded spans view, fully Catalyst-planned.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from .config import DEFAULT_CONFIG, ExtractorConfig
-from .constants import PT, RIL
+from .constants import PSM, PT, RIL
 from .core.osd import AVAILABLE_LANGUAGES
 from .udf import make_extract_columns_udf, make_extract_text_udf
-
-#: reading-order sort key of the span hierarchy (parents before children:
-#: lower levels carry -1 in child id slots).
-SPAN_ORDER = ("block_id", "para_id", "line_id", "word_id", "symbol_id", "level")
-
 
 #: the span fields in SPAN_SCHEMA order, each with the extraction-UDF column
 #: (EXTRACT_COLUMNS_SCHEMA) it comes from; ``bbox`` is four corner columns.
@@ -110,10 +105,33 @@ def extract_spans_long(
 def spans_long(docs: DataFrame) -> DataFrame:
     """Exploded spans view: one row per span, with reading-order ``pos``
     (iterate_level analogue, tesserocr/tesserocr.pyx:1173-1183). Spans never
-    cross documents, so ordering within url needs no global sort."""
-    return docs.select(
-        "url", F.posexplode("spans").alias("pos", "s")
-    ).select("url", "pos", "s.*")
+    cross documents, so ordering within url needs no global sort.
+
+    ``posexplode_outer`` + ``pos IS NOT NULL`` rather than ``posexplode``:
+    over an unpersisted ``extract_pages`` frame the optimizer infers
+    ``size(spans) > 0`` from a plain generator and pushes it below the
+    projection that builds ``spans``, which runs the extraction UDF a second
+    time just for that filter (tests/test_plans.py guards it)."""
+    return (
+        docs.select("url", F.posexplode_outer("spans").alias("pos", "s"))
+        .filter(F.col("pos").isNotNull())
+        .select("url", "pos", "s.*")
+    )
+
+
+def word_order() -> WindowSpec:
+    """Per-url reading order of WORD spans: (block, para, line, word)."""
+    return Window.partitionBy("url").orderBy("block_id", "para_id", "line_id", "word_id")
+
+
+def reading_order_words(sl: DataFrame) -> DataFrame:
+    """The one word law (AllWords / AllWordConfidences / MapWordConfidences /
+    MeanTextConf, tesserocr/tesserocr.pyx:2499-2559): the text-bearing WORD
+    rows of a spans view, with ``pos`` = their 0-based reading-order index
+    per url (replacing the span ``pos``). A caller that never reads ``pos``
+    pays no window: ColumnPruning drops it."""
+    words = sl.filter((F.col("level") == RIL.WORD) & F.col("text").isNotNull())
+    return words.withColumn("pos", F.row_number().over(word_order()) - 1)
 
 
 class SparkPageAPI:
@@ -176,8 +194,10 @@ class SparkPageAPI:
     def analyse_layout(self) -> DataFrame:
         """AnalyseLayout (tesserocr/tesserocr.pyx:2113-2134): spans with
         geometry/ids but NULL text; cheap corpus-structure pass."""
-        from .constants import PSM
+        return self._layout_spans()
 
+    def _layout_spans(self) -> DataFrame:
+        """spans_long of a layout-only (PSM.AUTO_ONLY) clone of this session."""
         api = SparkPageAPI(self.spark, self.config.with_psm(PSM.AUTO_ONLY))
         api._pages = self._pages
         return spans_long(api.recognize())
@@ -229,46 +249,27 @@ class SparkPageAPI:
         """GetIterator (tesserocr/tesserocr.pyx:2367-2377) — the spans_long view."""
         return spans_long(self.recognize())
 
+    def _words(self) -> DataFrame:
+        return reading_order_words(self.get_iterator())
+
     def all_words(self) -> DataFrame:
         """(url, pos, word) in reading order (AllWords, tesserocr.pyx:2528-2544)."""
-        sl = self.get_iterator().filter(
-            (F.col("level") == RIL.WORD) & F.col("text").isNotNull()
-        )
-        w = F.row_number().over(
-            _url_window().orderBy("block_id", "para_id", "line_id", "word_id")
-        ) - 1
-        return sl.select("url", w.alias("pos"), F.col("text").alias("word"))
+        return self._words().select("url", "pos", F.col("text").alias("word"))
 
     def all_word_confidences(self) -> DataFrame:
         """(url, pos, conf:int) — int truncation preserved
         (AllWordConfidences, tesserocr/tesserocr.pyx:2503-2526)."""
-        sl = self.get_iterator().filter(
-            (F.col("level") == RIL.WORD) & F.col("text").isNotNull()
-        )
-        w = F.row_number().over(
-            _url_window().orderBy("block_id", "para_id", "line_id", "word_id")
-        ) - 1
-        return sl.select("url", w.alias("pos"), F.col("conf").cast("int").alias("conf"))
+        return self._words().select("url", "pos", F.col("conf").cast("int").alias("conf"))
 
     def map_word_confidences(self) -> DataFrame:
         """(url, pos, word, conf) — positional zip
         (MapWordConfidences, tesserocr/tesserocr.pyx:2546-2559)."""
-        sl = self.get_iterator().filter(
-            (F.col("level") == RIL.WORD) & F.col("text").isNotNull()
-        )
-        w = F.row_number().over(
-            _url_window().orderBy("block_id", "para_id", "line_id", "word_id")
-        ) - 1
-        return sl.select("url", w.alias("pos"), F.col("text").alias("word"),
-                         F.col("conf").cast("int").alias("conf"))
+        return self._words().select("url", "pos", F.col("text").alias("word"),
+                                    F.col("conf").cast("int").alias("conf"))
 
     def mean_text_conf(self) -> DataFrame:
         """(url, conf:int) (MeanTextConf, tesserocr/tesserocr.pyx:2499-2501)."""
-        sl = self.get_iterator()
-        return (
-            sl.filter((F.col("level") == RIL.WORD) & F.col("text").isNotNull())
-            .groupBy("url").agg(F.avg("conf").cast("int").alias("conf"))
-        )
+        return self._words().groupBy("url").agg(F.avg("conf").cast("int").alias("conf"))
 
     # -- level projections (GetRegions/GetTextlines/GetWords/...) -----------
 
@@ -299,10 +300,7 @@ class SparkPageAPI:
     def is_within_first_textline_of_paragraph(self) -> DataFrame:
         """IsWithinFirstTextlineOfParagraph (tesserocr/tesserocr.pyx:484-487):
         word-level predicate — the word sits on its paragraph's first line."""
-        sl = self.get_iterator().filter(
-            (F.col("level") == RIL.WORD) & F.col("text").isNotNull()
-        )
-        return sl.select(
+        return self._words().select(
             "url", "block_id", "para_id", "line_id", "word_id",
             (F.col("line_id") == 0).alias("in_first_line"),
         )
@@ -310,11 +308,7 @@ class SparkPageAPI:
     def get_connected_components(self) -> DataFrame:
         """GetConnectedComponents (tesserocr/tesserocr.pyx:2008-2032):
         pre-recognition candidate components — the layout-only word boxes."""
-        from .constants import PSM
-
-        api = SparkPageAPI(self.spark, self.config.with_psm(PSM.AUTO_ONLY))
-        api._pages = self._pages
-        return spans_long(api.recognize()).filter(F.col("level") == RIL.WORD)
+        return self._layout_spans().filter(F.col("level") == RIL.WORD)
 
     # -- attribute accessors (tesserocr_spark.attributes views) -------------
 
@@ -511,8 +505,6 @@ class SparkPageAPI:
         the *preprocessed* document — all visible text normalized, boilerplate
         still present (PSM.SINGLE_COLUMN view) — plus the scale factor
         (GetThresholdedImageScaleFactor, :2104-2111)."""
-        from .constants import PSM
-
         return extract_text_only(
             self._pages, self.config.with_psm(PSM.SINGLE_COLUMN)
         ).select(
@@ -565,12 +557,6 @@ class SparkPageAPI:
 
     def get_init_languages_as_string(self) -> str:
         return self.config.lang
-
-
-def _url_window():
-    from pyspark.sql import Window
-
-    return Window.partitionBy("url")
 
 
 def tesseract_rect(

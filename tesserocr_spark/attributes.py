@@ -8,9 +8,10 @@ views decode them into the shapes the reference returns.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .api import reading_order_words
 from .constants import DIR, RIL, Justification, Orientation, TextlineOrder, WritingDirection
 from .core.extractor import (
     FLAG_BOLD,
@@ -49,18 +50,25 @@ def word_font_attributes(sl: DataFrame, source_ppi: int = 70) -> DataFrame:
     )
 
 
-def word_attributes(sl: DataFrame, dictionary: tuple[str, ...] = ()) -> DataFrame:
-    """WordIsNumeric / WordIsFromDictionary / WordDirection
-    (tesserocr/tesserocr.pyx:944-973): numeric + RTL decoded from flags,
-    dictionary membership against a broadcast word list."""
+def word_attribute_columns(dictionary: tuple[str, ...] = ()) -> list[Column]:
+    """word, is_numeric, is_from_dictionary, direction of a WORD span row."""
     is_dict = F.col("text").isin(*dictionary) if dictionary else F.lit(False)
-    return sl.filter((F.col("level") == RIL.WORD) & F.col("text").isNotNull()).select(
-        "url", "block_id", "para_id", "line_id", "word_id",
+    return [
         F.col("text").alias("word"),
         _has(FLAG_NUMERIC).alias("is_numeric"),
         is_dict.alias("is_from_dictionary"),
         F.when(_has(FLAG_RTL), DIR.RIGHT_TO_LEFT)
         .otherwise(DIR.LEFT_TO_RIGHT).alias("direction"),
+    ]
+
+
+def word_attributes(sl: DataFrame, dictionary: tuple[str, ...] = ()) -> DataFrame:
+    """WordIsNumeric / WordIsFromDictionary / WordDirection
+    (tesserocr/tesserocr.pyx:944-973): numeric + RTL decoded from flags,
+    dictionary membership against a broadcast word list."""
+    return reading_order_words(sl).select(
+        "url", "block_id", "para_id", "line_id", "word_id",
+        *word_attribute_columns(dictionary),
     )
 
 
@@ -73,7 +81,7 @@ def word_recognition_language(docs: DataFrame) -> DataFrame:
     sl = docs.select("url", "lang", F.explode("spans").alias("s")).select(
         "url", "lang", "s.*"
     )
-    return sl.filter((F.col("level") == RIL.WORD) & F.col("text").isNotNull()).select(
+    return reading_order_words(sl).select(
         "url", "block_id", "para_id", "line_id", "word_id",
         F.col("text").alias("word"),
         F.col("lang").alias("recognition_lang"),
@@ -94,7 +102,7 @@ def word_normed_text(sl: DataFrame) -> DataFrame:
     """WordNormedUTF8Text (tesserocr/tesserocr.pyx:1002-1006): the normalized
     recognition string per word — lowercased, trimmed, NFKC-folded for the
     extractor's emittable non-ASCII set (see ``normed_word``)."""
-    return sl.filter((F.col("level") == RIL.WORD) & F.col("text").isNotNull()).select(
+    return reading_order_words(sl).select(
         "url", "block_id", "para_id", "line_id", "word_id",
         F.col("text").alias("word"),
         normed_word(F.col("text")).alias("normed_text"),
@@ -241,7 +249,7 @@ def paragraph_is_ltr(sl: DataFrame) -> DataFrame:
     dominant reading direction — left-to-right unless a strict majority of
     its words carry the RTL bidi flag. One hash agg keyed by paragraph."""
     return (
-        sl.filter((F.col("level") == RIL.WORD) & F.col("text").isNotNull())
+        reading_order_words(sl)
         .groupBy("url", "block_id", "para_id")
         .agg(
             (F.sum(_has(FLAG_RTL).cast("int")) * 2 <= F.count("*"))

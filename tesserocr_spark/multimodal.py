@@ -1265,9 +1265,6 @@ def decode_jpeg_pixels(payload: bytes) -> bytes | None:
 #: samples/pixel.
 _TIFF_TAGS = {256, 257, 258, 259, 273, 278, 279, 277}
 
-#: bytes per TIFF field type (1 BYTE, 2 ASCII, 3 SHORT, 4 LONG, 5 RATIONAL)
-_TIFF_TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8}
-
 
 def _tiff_ifds(payload: bytes, lt: str):
     """Yield the byte offset of each IFD in the chain (TIFF 6.0 §2: 2-byte

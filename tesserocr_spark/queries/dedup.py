@@ -406,9 +406,6 @@ def _simhash_expr(bits: int) -> str:
     )
 
 
-_SIMHASH_EXPR = _simhash_expr(_SIMHASH_BITS_LEGACY16)
-
-
 def _simhash(cand: DataFrame, bits: int = _SIMHASH64_BITS) -> DataFrame:
     wh = cand.select(
         "doc_id",

@@ -10,11 +10,10 @@ confidence), not just relational plumbing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..api import spans_long
-from ..constants import RIL
+from ..api import reading_order_words, spans_long, word_order
 from .registry import (
     SQL_CONF,
     SQL_PAGES,
@@ -156,13 +155,10 @@ FROM words""",
 def word_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IsAtBeginningOf / IsAtFinalElement (tesserocr/tesserocr.pyx:518-568)
     as lag/lead boundary flags over the reading-order window."""
-    sl = spans_long(docs_for(spark, sf_dir)).filter(
-        (F.col("level") == RIL.WORD) & F.col("text").isNotNull()
-    )
-    w = Window.partitionBy("url").orderBy("block_id", "para_id", "line_id", "word_id")
+    w = word_order()
     line_key = F.struct("block_id", "para_id", "line_id")
     return (
-        sl.withColumn("pos", F.row_number().over(w) - 1)
+        reading_order_words(spans_long(docs_for(spark, sf_dir)))
         .withColumn(
             "is_line_start",
             F.lag(line_key).over(w).isNull()
@@ -228,9 +224,7 @@ def fold_from_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     blanks-joined words -> line strings -> '\\n'-joined paras + terminator ->
     blank-line-joined document. Must byte-match both the UDF text and the
     closed-form SQL oracle."""
-    words = spans_long(docs_for(spark, sf_dir)).filter(
-        (F.col("level") == RIL.WORD) & F.col("text").isNotNull()
-    )
+    words = reading_order_words(spans_long(docs_for(spark, sf_dir)))
     lines = (
         words.withColumn("piece", F.concat(F.repeat(F.lit(" "), F.col("blanks")), "text"))
         .groupBy("url", "block_id", "para_id", "line_id")
@@ -267,13 +261,8 @@ def blanks_before_word(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BlanksBeforeWord (tesserocr/tesserocr.pyx:965-968): 0 at line start,
     1 otherwise — the law behind the byte-identity fold
     (reference fixture tests/test_api.py:217-223)."""
-    sl = spans_long(docs_for(spark, sf_dir)).filter(
-        (F.col("level") == RIL.WORD) & F.col("text").isNotNull()
-    )
-    w = Window.partitionBy("url").orderBy("block_id", "para_id", "line_id", "word_id")
-    return sl.select(
-        "url", (F.row_number().over(w) - 1).alias("pos"),
-        F.col("blanks").cast("int").alias("blanks"),
+    return reading_order_words(spans_long(docs_for(spark, sf_dir))).select(
+        "url", "pos", F.col("blanks").cast("int").alias("blanks")
     )
 
 
@@ -291,14 +280,11 @@ def word_attributes_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WordIsNumeric / WordIsFromDictionary / WordDirection
     (tesserocr/tesserocr.pyx:944-973) over the real extraction, dictionary =
     the broadcast stopword list."""
-    from ..attributes import word_attributes
+    from ..attributes import word_attribute_columns
     from .textops import STOPWORDS
 
-    attrs = word_attributes(spans_long(docs_for(spark, sf_dir)), STOPWORDS)
-    w = Window.partitionBy("url").orderBy("block_id", "para_id", "line_id", "word_id")
-    return attrs.select(
-        "url", (F.row_number().over(w) - 1).alias("pos"), "word",
-        "is_numeric", "is_from_dictionary", "direction",
+    return reading_order_words(spans_long(docs_for(spark, sf_dir))).select(
+        "url", "pos", *word_attribute_columns(STOPWORDS)
     )
 
 

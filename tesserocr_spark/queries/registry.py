@@ -107,22 +107,12 @@ def docs_for(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def words_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WORD-level spans with reading-order pos (AllWords base view)."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from ..api import spans_long
-    from ..constants import RIL
+    from ..api import reading_order_words, spans_long
 
-    sl = spans_long(docs_for(spark, sf_dir))
-    w = (
-        F.row_number().over(
-            Window.partitionBy("url").orderBy("block_id", "para_id", "line_id", "word_id")
-        )
-        - 1
-    )
-    return (
-        sl.filter((F.col("level") == RIL.WORD) & F.col("text").isNotNull())
-        .select("url", w.alias("pos"), F.col("text").alias("word"), "conf", "bbox")
+    return reading_order_words(spans_long(docs_for(spark, sf_dir))).select(
+        "url", "pos", F.col("text").alias("word"), "conf", "bbox"
     )
 
 

@@ -69,13 +69,33 @@ def _esc(col: str) -> str:
     return out
 
 
-def _hocr_expr(font_info: bool) -> str:
-    """hOCR document as ONE Catalyst expression over (url, spans).
+def _preorder_markup(opens: tuple[str, str, str, str], closes: tuple[str, str, str]) -> str:
+    """``flatten(transform(f, (s, i) -> piece))`` over the pre-order spans
+    ``f`` (BLOCK, PARA, LINE, WORD...): each span emits its level's markup
+    from ``opens`` (block, para, line, word expressions over ``s``), and a
+    WORD then closes the levels its successor re-opens — ``closes`` holds
+    the line, para and block close tags — a per-element lookahead, no
+    sorting."""
+    block, para, line, word = opens
+    tags = [f"'{t}'" for t in closes]
+    shut = (
+        f"CASE WHEN i + 2 > size(f) THEN array({', '.join(tags)}) "
+        "ELSE CASE element_at(f, i + 2).level "
+        "WHEN 3 THEN cast(array() as array<string>) "
+        f"WHEN 2 THEN array({tags[0]}) "
+        f"WHEN 1 THEN array({', '.join(tags[:2])}) "
+        f"ELSE array({', '.join(tags)}) END END"
+    )
+    piece = (
+        f"CASE s.level WHEN 0 THEN array({block}) WHEN 1 THEN array({para}) "
+        f"WHEN 2 THEN array({line}) ELSE concat(array({word}), {shut}) END"
+    )
+    return f"flatten(transform(f, (s, i) -> {piece}))"
 
-    The spans array is emitted in pre-order (BLOCK, PARA, LINE, WORD...), so
-    each span maps to its opening markup and a WORD additionally closes the
-    line/para/block levels its successor re-opens — a per-element lookahead,
-    no sorting. Byte-identical to core.fold.hocr_text (locked by
+
+def _hocr_expr(font_info: bool) -> str:
+    """hOCR document as ONE Catalyst expression over (url, f), built by
+    ``_preorder_markup``. Byte-identical to core.fold.hocr_text (locked by
     tests/test_sinks_jobs.py); keeps the hOCR sink stage fully JVM-side
     (whole-stage codegen, zero Python) like the TSV sink."""
     bb = "'bbox ', s.bbox.x0, ' ', s.bbox.y0, ' ', s.bbox.x1, ' ', s.bbox.y1"
@@ -91,26 +111,20 @@ def _hocr_expr(font_info: bool) -> str:
         "'; x_wconf ', cast(s.conf as int), " + font + "'\">', "
         + _esc("s.text") + ", '</span>')"
     )
-    closes = (
-        "CASE WHEN i + 2 > size(f) THEN array('</span>', '</p>', '</div>') "
-        "ELSE CASE element_at(f, i + 2).level "
-        "WHEN 3 THEN cast(array() as array<string>) "
-        "WHEN 2 THEN array('</span>') "
-        "WHEN 1 THEN array('</span>', '</p>') "
-        "ELSE array('</span>', '</p>', '</div>') END END"
-    )
-    piece = (
-        "CASE s.level "
-        "WHEN 0 THEN array(concat('<div class=\"ocr_carea\" id=\"block_1_', "
-        "s.block_id + 1, '\" title=\"', " + bb + ", '\">')) "
-        "WHEN 1 THEN array(concat('<p class=\"ocr_par\" title=\"', " + bb + ", '\">')) "
-        "WHEN 2 THEN array(concat('<span class=\"ocr_line\" title=\"', " + bb + ", '\">')) "
-        "ELSE concat(array(" + word + "), " + closes + ") END"
+    body = _preorder_markup(
+        (
+            "concat('<div class=\"ocr_carea\" id=\"block_1_', s.block_id + 1, "
+            "'\" title=\"', " + bb + ", '\">')",
+            "concat('<p class=\"ocr_par\" title=\"', " + bb + ", '\">')",
+            "concat('<span class=\"ocr_line\" title=\"', " + bb + ", '\">')",
+            word,
+        ),
+        ("</span>", "</p>", "</div>"),
     )
     return (
         "concat_ws('\\n', concat(array(concat('<div class=\"ocr_page\" "
         "id=\"page_1\" title=\"image ', " + _esc("url") + ", '\">')), "
-        "flatten(transform(f, (s, i) -> " + piece + ")), array('</div>')))"
+        + body + ", array('</div>')))"
     )
 
 
@@ -120,48 +134,34 @@ def hocr_sink(docs: DataFrame, font_info: bool = False) -> DataFrame:
     (tesserocr/tesserocr.pyx:2206-2208). Pure expression — no Python in
     the sink stage (core.fold.hocr_text is the tested reference twin)."""
     return docs.select(
-        "url", F.col("spans").alias("all_spans")
-    ).select(
-        "url", F.expr("filter(coalesce(all_spans, array()), s -> s.level < 4)").alias("f")
-    ).select(
-        "url", F.expr(_hocr_expr(font_info)).alias("hocr")
-    )
+        "url", F.expr("filter(coalesce(spans, array()), s -> s.level < 4)").alias("f")
+    ).select("url", F.expr(_hocr_expr(font_info)).alias("hocr"))
 
 
 def _alto_expr() -> str:
-    """ALTO-XML document as ONE Catalyst expression over (url, f) — the same
-    pre-order/lookahead scheme as ``_hocr_expr``; byte-identical twin of
+    """ALTO-XML document as ONE Catalyst expression over (url, f), built by
+    ``_preorder_markup`` like ``_hocr_expr``; byte-identical twin of
     core.fold.alto_text (locked by tests/test_sinks_jobs.py)."""
-    def geo(pre: str = "s") -> str:
-        return (
-            f"'HPOS=\"', {pre}.bbox.x0, '\" VPOS=\"', {pre}.bbox.y0, "
-            f"'\" WIDTH=\"', {pre}.bbox.x1 - {pre}.bbox.x0, "
-            f"'\" HEIGHT=\"', {pre}.bbox.y1 - {pre}.bbox.y0, '\"'"
-        )
-
+    geo = (
+        "'HPOS=\"', s.bbox.x0, '\" VPOS=\"', s.bbox.y0, "
+        "'\" WIDTH=\"', s.bbox.x1 - s.bbox.x0, "
+        "'\" HEIGHT=\"', s.bbox.y1 - s.bbox.y0, '\"'"
+    )
     word = (
         "concat(CASE WHEN s.blanks > 0 THEN concat('<SP WIDTH=\"', s.blanks, "
-        "'\"/>\\n') ELSE '' END, '<String ', " + geo() + ", "
+        "'\"/>\\n') ELSE '' END, '<String ', " + geo + ", "
         "' WC=\"', format_number(s.conf / 100, 2), '\" CONTENT=\"', "
         + _esc("s.text") + ", '\"/>')"
     )
-    closes = (
-        "CASE WHEN i + 2 > size(f) "
-        "THEN array('</TextLine>', '</TextBlock>', '</ComposedBlock>') "
-        "ELSE CASE element_at(f, i + 2).level "
-        "WHEN 3 THEN cast(array() as array<string>) "
-        "WHEN 2 THEN array('</TextLine>') "
-        "WHEN 1 THEN array('</TextLine>', '</TextBlock>') "
-        "ELSE array('</TextLine>', '</TextBlock>', '</ComposedBlock>') END END"
-    )
-    piece = (
-        "CASE s.level "
-        "WHEN 0 THEN array(concat('<ComposedBlock ID=\"cblock_', s.block_id, "
-        "'\" ', " + geo() + ", '>')) "
-        "WHEN 1 THEN array(concat('<TextBlock ID=\"block_', s.block_id, '_', "
-        "s.para_id, '\" ', " + geo() + ", '>')) "
-        "WHEN 2 THEN array(concat('<TextLine ', " + geo() + ", '>')) "
-        "ELSE concat(array(" + word + "), " + closes + ") END"
+    body = _preorder_markup(
+        (
+            "concat('<ComposedBlock ID=\"cblock_', s.block_id, '\" ', " + geo + ", '>')",
+            "concat('<TextBlock ID=\"block_', s.block_id, '_', s.para_id, '\" ', "
+            + geo + ", '>')",
+            "concat('<TextLine ', " + geo + ", '>')",
+            word,
+        ),
+        ("</TextLine>", "</TextBlock>", "</ComposedBlock>"),
     )
     pw = "coalesce(array_max(transform(f, s -> s.bbox.x1)), 0)"
     ph = "coalesce(array_max(transform(f, s -> s.bbox.y1)), 0)"
@@ -176,7 +176,7 @@ def _alto_expr() -> str:
         "'\" PHYSICAL_IMG_NR=\"0\" ID=\"page_0\">'), "
         "concat('<PrintSpace HPOS=\"0\" VPOS=\"0\" WIDTH=\"', " + pw + ", "
         "'\" HEIGHT=\"', " + ph + ", '\">')), "
-        "flatten(transform(f, (s, i) -> " + piece + ")), "
+        + body + ", "
         "array('</PrintSpace>', '</Page>', '</Layout>', '</alto>')))"
     )
 

@@ -108,13 +108,15 @@ def dedup_page_stream(pages: DataFrame, n_buckets: int = 64) -> DataFrame:
     url hashes already extracted; only first-seen pages pass through.
 
     At corpus scale the state is bounded per bucket and keyed exactly like
-    the batch lineage (pmod(xxhash64(url), n_buckets)), so a streaming
+    the batch lineage (``jobs.with_bucket``), so a streaming
     ingest and a batch backfill share one dedup law.
     """
     import hashlib
 
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    from .jobs import with_bucket
 
     out_schema = (
         "bucket int, url string, warc_ts timestamp, html binary, "
@@ -144,10 +146,7 @@ def dedup_page_stream(pages: DataFrame, n_buckets: int = 64) -> DataFrame:
                 yield out
         state.update((DEDUP_STATE_VERSION, list(seen)))
 
-    keyed = pages.withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-    )
-    return keyed.groupBy("bucket").applyInPandasWithState(
+    return with_bucket(pages, n_buckets).groupBy("bucket").applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
 

@@ -66,6 +66,43 @@ def test_single_arrow_eval_for_full_extract(spark):
     assert plan.count("ArrowEvalPython") == 1
 
 
+def test_single_arrow_eval_for_spans_views_of_unpersisted_extract(spark):
+    """spans_long (and tsv_sink over it) on an unpersisted extract_pages
+    frame runs the extractor once: a plain posexplode made the optimizer
+    infer ``size(spans) > 0`` below the projection and evaluate the UDF a
+    second time for that filter alone."""
+    from tesserocr_spark.api import extract_pages, spans_long
+    from tesserocr_spark.pages import synthetic_pages
+    from tesserocr_spark.sinks import tsv_sink
+
+    pages = synthetic_pages(spark, 10)
+    for view in (spans_long, tsv_sink):
+        assert _plan(view(extract_pages(pages))).count("ArrowEvalPython") == 1, view
+
+
+def test_word_view_window_pruned_when_pos_unread(spark):
+    """The reading-order word view's ``pos`` window is dropped by the
+    optimizer when nothing reads ``pos`` (mean/fold/paragraph views), and
+    kept exactly once when it is read."""
+    from tesserocr_spark.api import spans_long
+    from tesserocr_spark.attributes import paragraph_is_ltr
+    from tesserocr_spark.queries.extraction import (
+        all_words,
+        fold_from_spans,
+        mean_text_conf,
+    )
+    from tesserocr_spark.queries.registry import docs_for
+
+    def windows(df) -> int:
+        return df._jdf.queryExecution().optimizedPlan().toString().count("Window [")
+
+    sl = spans_long(docs_for(spark, SF_DIR))
+    for df in (mean_text_conf(spark, SF_DIR), fold_from_spans(spark, SF_DIR),
+               paragraph_is_ltr(sl)):
+        assert windows(df) == 0
+    assert windows(all_words(spark, SF_DIR)) == 1
+
+
 def test_dedup_exact_single_shuffle(spark):
     """Exact dedup = one hash-agg shuffle keyed by fingerprint."""
     from tesserocr_spark.queries.dedup import dedup_exact

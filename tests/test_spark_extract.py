@@ -207,6 +207,24 @@ class TestAPIFacade:
                 (F.col("conf") < 84) | (F.col("conf") > 95)
             ).count() == 0
 
+    def test_session_and_registry_share_the_word_law(self, spark, sf_dir):
+        """SparkPageAPI's word methods and the registry's word queries are
+        one reading-order view: the same rows over the same documents."""
+        from tesserocr_spark.queries.registry import QUERIES
+
+        api = SparkPageAPI(spark).set_pages(pages_from_documents(spark, sf_dir))
+        try:
+            for name in ("all_words", "all_word_confidences",
+                         "map_word_confidences", "mean_text_conf"):
+                mine = getattr(api, name)()
+                theirs = QUERIES[name](spark, sf_dir)
+                assert mine.columns == theirs.columns, name
+                got = sorted(map(tuple, mine.collect()))
+                assert got, name
+                assert got == sorted(map(tuple, theirs.collect())), name
+        finally:
+            api.end()
+
     def test_region_recognize_equals_local_core(self, spark, pages):
         """SetRectangle goes through the one columns UDF: per url, text and
         spans equal the local core's ``extract(html, region=...)``."""

@@ -141,6 +141,31 @@ def test_stateful_stream_dedup_across_batches(spark, tmp_path):
     assert len(set(urls)) == 45  # union of both crawls exactly once
 
 
+def test_stream_dedup_buckets_like_the_batch_lineage(spark, tmp_path):
+    """dedup_page_stream keys its state by the batch bucket law:
+    each emitted url's ``bucket`` equals ``jobs.with_bucket``'s."""
+    from tesserocr_spark.jobs import with_bucket
+    from tesserocr_spark.streaming import dedup_page_stream
+
+    src = str(tmp_path / "bucket_src")
+    pages = synthetic_pages(spark, 40)
+    pages.repartition(2).write.parquet(src)
+    q = (
+        dedup_page_stream(read_page_stream(spark, src))
+        .writeStream.format("memory")
+        .queryName("dedup_buckets")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt_buckets"))
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    got = {r.url: r.bucket for r in spark.sql("SELECT url, bucket FROM dedup_buckets").collect()}
+    exp = {r.url: r.bucket for r in with_bucket(pages).select("url", "bucket").collect()}
+    assert got == exp
+    assert len(set(exp.values())) > 1
+
+
 def test_stream_quality_gates_equal_batch(spark, tmp_path):
     """The LLM-pipeline operators are stateless JVM projections, so the
     SAME operator runs on a streaming frame — locked for the quality
