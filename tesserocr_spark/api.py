@@ -183,13 +183,17 @@ class SparkPageAPI:
     def recognize(self, timeout_ms_per_doc: int = 0) -> DataFrame:
         """Materialize extraction results (Recognize,
         tesserocr/tesserocr.pyx:2136-2163). Cached for multi-query reuse."""
-        if self._pages is None:
-            raise RuntimeError("no pages bound; call set_pages() first")
+        pages = self._bound_pages()
         if self._docs is None:
             self._docs = extract_pages(
-                self._pages, self.config, timeout_ms_per_doc, region=self._region
+                pages, self.config, timeout_ms_per_doc, region=self._region
             ).persist()
         return self._docs
+
+    def _bound_pages(self) -> DataFrame:
+        if self._pages is None:
+            raise RuntimeError("no pages bound; call set_pages() first")
+        return self._pages
 
     def analyse_layout(self) -> DataFrame:
         """AnalyseLayout (tesserocr/tesserocr.pyx:2113-2134): spans with
@@ -197,10 +201,13 @@ class SparkPageAPI:
         return self._layout_spans()
 
     def _layout_spans(self) -> DataFrame:
-        """spans_long of a layout-only (PSM.AUTO_ONLY) clone of this session."""
-        api = SparkPageAPI(self.spark, self.config.with_psm(PSM.AUTO_ONLY))
-        api._pages = self._pages
-        return spans_long(api.recognize())
+        """spans_long of a layout-only (PSM.AUTO_ONLY) extraction of the
+        bound pages. Not persisted: nothing reuses it, ``spans_long`` runs
+        the extractor once, and ``clear()``/``end()`` release only
+        ``recognize()``'s frame."""
+        return spans_long(
+            extract_pages(self._bound_pages(), self.config.with_psm(PSM.AUTO_ONLY))
+        )
 
     def clear(self) -> None:
         """Clear (tesserocr/tesserocr.pyx:2580-2586): drop results, keep config."""

@@ -77,9 +77,13 @@ def word_recognition_language(docs: DataFrame) -> DataFrame:
     used to recognize each word. The graft engine recognizes a whole page
     under one language (the pages.lang column), so the accessor projects the
     document language onto its WORD spans. Requires ``docs`` to carry the
-    ``lang`` column (extract_pages keeps it when the input has it)."""
-    sl = docs.select("url", "lang", F.explode("spans").alias("s")).select(
-        "url", "lang", "s.*"
+    ``lang`` column (extract_pages keeps it when the input has it).
+    ``explode_outer`` + a non-NULL filter, as in ``api.spans_long``, so an
+    unpersisted ``extract_pages`` input runs the extractor once."""
+    sl = (
+        docs.select("url", "lang", F.explode_outer("spans").alias("s"))
+        .filter(F.col("s").isNotNull())
+        .select("url", "lang", "s.*")
     )
     return reading_order_words(sl).select(
         "url", "block_id", "para_id", "line_id", "word_id",

@@ -68,13 +68,18 @@ candidates AS (
 """
 
 
-def _candidates_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    copies = (
-        d.filter(F.col("doc_id") % _PLANT_MOD == 0)
-        .select((F.col("doc_id") + _PLANT_OFFSET).alias("doc_id"), "text")
+def _planted(d: DataFrame, copy_text) -> DataFrame:
+    """``d`` (doc_id, text) plus a copy of every ``doc_id % 7 == 0`` row at
+    ``doc_id + 100000`` whose text is the ``copy_text`` column."""
+    copies = d.filter(F.col("doc_id") % _PLANT_MOD == 0).select(
+        (F.col("doc_id") + _PLANT_OFFSET).alias("doc_id"), copy_text.alias("text")
     )
     return d.unionByName(copies)
+
+
+def _candidates_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    return _planted(d, F.col("text"))
 
 
 def _candidates_near(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -82,11 +87,7 @@ def _candidates_near(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id", F.trim("text").alias("text"))
     )
-    copies = d.filter(F.col("doc_id") % _PLANT_MOD == 0).select(
-        (F.col("doc_id") + _PLANT_OFFSET).alias("doc_id"),
-        F.expr("substring(text, instr(text, ' ') + 1)").alias("text"),
-    )
-    return d.unionByName(copies)
+    return _planted(d, F.expr("substring(text, instr(text, ' ') + 1)"))
 
 
 @query(
@@ -137,6 +138,22 @@ def _shingle_array(cand: DataFrame) -> DataFrame:
                 "ELSE cast(array() as array<string>) END"
             )
         ).alias("sh"),
+    )
+
+
+def _jaccard(pairs: DataFrame, sh: DataFrame) -> DataFrame:
+    """(a_id, b_id, j) — candidate pairs joined to both documents' distinct
+    shingle arrays, with ``j`` their UNROUNDED Jaccard (no re-explode, no
+    collect_set: the array IS the set). Each pair operator applies its own
+    gate to ``j``."""
+    sa, sb = sh.alias("sa"), sh.alias("sb")
+    j = F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh"))).cast(
+        "double"
+    ) / F.size(F.array_union(F.col("sa.sh"), F.col("sb.sh")))
+    return (
+        pairs.join(sa, F.col("sa.doc_id") == F.col("a_id"))
+        .join(sb, F.col("sb.doc_id") == F.col("b_id"))
+        .select("a_id", "b_id", j.alias("j"))
     )
 
 
@@ -335,18 +352,10 @@ def minhash_lsh_pairs_frame(cand: DataFrame) -> DataFrame:
         .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
         .distinct()
     )
-    # verification: true Jaccard over the distinct shingle arrays (no
-    # re-explode, no collect_set — the array IS the set)
-    sa, sb = sh.alias("sa"), sh.alias("sb")
-    jac = F.round(
-        F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh"))).cast("double")
-        / F.size(F.array_union(F.col("sa.sh"), F.col("sb.sh"))),
-        4,
-    )
+    # verification gates on the ROUNDED Jaccard (the oracle law)
     return (
-        pairs.join(sa, F.col("sa.doc_id") == F.col("a_id"))
-        .join(sb, F.col("sb.doc_id") == F.col("b_id"))
-        .select("a_id", "b_id", jac.alias("jaccard"))
+        _jaccard(pairs, sh)
+        .select("a_id", "b_id", F.round("j", 4).alias("jaccard"))
         .filter(F.col("jaccard") >= 0.5)
     )
 
@@ -356,43 +365,53 @@ def minhash_lsh_pairs_frame(cand: DataFrame) -> DataFrame:
 #: LEGACY 16-bit signature width — kept ONLY for the oracle-frozen
 #: ``simhash_signatures`` / ``dedup_simhash`` parity queries. Do NOT use in
 #: new compositions: 16-bit slice values have 32-64 possible values, so
-#: candidate buckets grow O(N²/64) at corpus scale. ``_simhash`` defaults
-#: to the wide ``_SIMHASH64_BITS`` signature (r05, VERDICT r04 task #6).
+#: candidate buckets grow O(N²/64) at corpus scale. ``_simhash`` takes the
+#: width from every caller; new compositions pass ``_SIMHASH64_BITS``.
 _SIMHASH_BITS_LEGACY16 = 16
 
 #: effective signature width of the frozen md5-hex→int64 law: 15 hex chars
 #: = 60 bits (a full 64 would overflow signed int64 in the DuckDB twin).
-#: Defined here (above ``_simhash``) because it is the module-wide DEFAULT.
 _SIMHASH64_BITS = 60
 
+#: near-dup radius: pairs within this Hamming distance are reported.
+_SIMHASH_RADIUS = 2
 
-def _sql_simhash(bits: int, sfx: str = "") -> str:
-    """DuckDB simhash CTE chain, parameterized by signature width; ``sfx``
-    suffixes the CTE names so 16- and 60-bit chains can coexist."""
+
+def _sql_simhash(bits: int) -> str:
+    """DuckDB simhash CTE chain, parameterized by signature width."""
     return f"""
-words{sfx} AS (
+words AS (
   SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS word
   FROM candidates
 ),
-wh{sfx} AS (
-  SELECT doc_id, ('0x' || substr(md5(word), 1, 15))::BIGINT AS h FROM words{sfx}
+wh AS (
+  SELECT doc_id, ('0x' || substr(md5(word), 1, 15))::BIGINT AS h FROM words
 ),
-bits{sfx} AS (
+bits AS (
   SELECT doc_id, b.i AS bit,
          sum(CASE WHEN (h >> b.i) & 1 = 1 THEN 1 ELSE -1 END) AS s
-  FROM wh{sfx}, (SELECT unnest(range({bits})) AS i) b
+  FROM wh, (SELECT unnest(range({bits})) AS i) b
   GROUP BY doc_id, b.i
 ),
-sims{sfx} AS (
+sims AS (
   SELECT doc_id,
          CAST(sum(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << bit) ELSE 0 END)
               AS BIGINT) AS simhash
-  FROM bits{sfx} GROUP BY doc_id
+  FROM bits GROUP BY doc_id
 )
 """
 
 
 _SQL_SIMHASH = _sql_simhash(_SIMHASH_BITS_LEGACY16)
+
+#: all-pairs Hamming scan over ``sims`` — the oracle twin of
+#: ``_simhash_pairs`` for both widths.
+_SQL_SIMHASH_PAIRS = f"""
+SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
+FROM sims a JOIN sims b ON a.doc_id < b.doc_id
+WHERE bit_count(xor(a.simhash, b.simhash)) <= {_SIMHASH_RADIUS}"""
+
 
 def _simhash_expr(bits: int) -> str:
     """simhash over per-doc distinct word hashes ``hs`` — for each bit, the
@@ -406,13 +425,17 @@ def _simhash_expr(bits: int) -> str:
     )
 
 
-def _simhash(cand: DataFrame, bits: int = _SIMHASH64_BITS) -> DataFrame:
-    wh = cand.select(
+def _simhash(cand: DataFrame, bits: int) -> DataFrame:
+    """(doc_id, simhash) ``bits``-wide signatures. The word-hash frame is
+    persisted first: every per-bit lambda reads ``hs``, and CollapseProject
+    inlines an unpersisted ``hs`` projection into each of them, which would
+    md5-hash every word once per bit (tests/test_plans.py guards it)."""
+    wh = track_persist(cand.select(
         "doc_id",
         F.expr(
             "transform(array_distinct(split(text, ' ')), x -> " + _HASH.format(x="x") + ")"
         ).alias("hs"),
-    )
+    ))
     return wh.select(
         "doc_id", F.expr(_simhash_expr(bits)).cast("bigint").alias("simhash")
     )
@@ -424,29 +447,35 @@ def _simhash(cand: DataFrame, bits: int = _SIMHASH64_BITS) -> DataFrame:
 )
 def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash signature per document (word-level features).
-    LEGACY width, oracle-frozen — passes the 16-bit override explicitly;
-    the module default is the wide signature."""
-    return _simhash(_candidates_near(spark, sf_dir), bits=_SIMHASH_BITS_LEGACY16)
+    LEGACY width, oracle-frozen."""
+    return _simhash(_candidates_near(spark, sf_dir), _SIMHASH_BITS_LEGACY16)
 
 
-#: pigeonhole bit-slices for Hamming <= 2 on 16-bit signatures: 3 slices
-#: (6+5+5 bits) — any pair within distance 2 matches exactly on >= 1 slice.
-_SIMHASH_SLICES = (
-    "array(named_struct('sid', 0, 'sval', simhash & 63), "
-    "named_struct('sid', 1, 'sval', shiftright(simhash, 6) & 31), "
-    "named_struct('sid', 2, 'sval', shiftright(simhash, 11) & 31))"
-)
+def _simhash_slices(bits: int) -> str:
+    """Pigeonhole bit-slices for Hamming <= ``_SIMHASH_RADIUS``: radius + 1
+    slices, so any pair within the radius matches exactly on >= 1 slice.
+    Slice 0 takes the remainder bits: 6+5+5 at 16 bits, 3 x 20 at 60."""
+    n = _SIMHASH_RADIUS + 1
+    w = bits // n
+    lo = bits - (n - 1) * w
+    vals = [f"simhash & {(1 << lo) - 1}"] + [
+        f"shiftright(simhash, {lo + (i - 1) * w}) & {(1 << w) - 1}"
+        for i in range(1, n)
+    ]
+    return "array(" + ", ".join(
+        f"named_struct('sid', {i}, 'sval', {v})" for i, v in enumerate(vals)
+    ) + ")"
 
 
-def _simhash_pairs(sig: DataFrame, slices_sql: str, max_hamming: int = 2) -> DataFrame:
-    """Pigeonhole-blocked Hamming pairs over a (doc_id, simhash) frame:
-    explode the bit slices → (sid, sval) EQUI-join → map-side Hamming
-    filter (free predicate) → distinct (the one shuffle that dedupes
-    multi-slice matches). Shared by the 16- and 60-bit operators so the
-    pairing law lives in exactly one place."""
+def _simhash_pairs(sig: DataFrame, bits: int) -> DataFrame:
+    """Pigeonhole-blocked Hamming pairs over a (doc_id, simhash) frame of
+    ``bits``-wide signatures: explode the bit slices → (sid, sval)
+    EQUI-join → map-side Hamming filter (free predicate) → distinct (the
+    one shuffle that dedupes multi-slice matches). Shared by the 16- and
+    60-bit operators so the pairing law lives in exactly one place."""
     s = track_persist(sig)  # both sides of the slice self-join
     sl = s.select(
-        "doc_id", "simhash", F.explode(F.expr(slices_sql)).alias("p")
+        "doc_id", "simhash", F.explode(F.expr(_simhash_slices(bits))).alias("p")
     ).select("doc_id", "simhash", "p.sid", "p.sval")
     a, b = sl.alias("a"), sl.alias("b")
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).cast("int")
@@ -462,19 +491,14 @@ def _simhash_pairs(sig: DataFrame, slices_sql: str, max_hamming: int = 2) -> Dat
             F.col("b.doc_id").alias("b_id"),
             ham.alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= _SIMHASH_RADIUS)
         .distinct()
     )
 
 
 @query(
     "dedup_simhash",
-    oracle=f"""
-WITH {_SQL_CANDIDATES_NEAR}, {_SQL_SIMHASH.rstrip()}
-SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-FROM sims a JOIN sims b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= 2""",
+    oracle=f"WITH {_SQL_CANDIDATES_NEAR}, {_SQL_SIMHASH.rstrip()}{_SQL_SIMHASH_PAIRS}",
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: Hamming distance ≤ 2 on 16-bit signatures.
@@ -494,44 +518,27 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~2^21 cardinality; 16 bits is frozen here by the oracle law — see
     ``dedup_simhash64`` for the wide variant.)"""
     return _simhash_pairs(
-        _simhash(_candidates_near(spark, sf_dir), bits=_SIMHASH_BITS_LEGACY16),
-        _SIMHASH_SLICES,
+        _simhash(_candidates_near(spark, sf_dir), _SIMHASH_BITS_LEGACY16),
+        _SIMHASH_BITS_LEGACY16,
     )
 
 
 # -- simhash64: the wide-signature variant that scales -------------------------
 
-_SQL_SIMHASH64 = _sql_simhash(_SIMHASH64_BITS, "64")
-
-#: pigeonhole slices for Hamming <= 2 on the 60-bit signature: 3 x 20-bit
-#: slices — slice values have ~2^20 cardinality, so the (sid, sval)
-#: equi-join keys are CONTENT-DERIVED and grow with the corpus. This is the
-#: scale fix for the 16-bit operator above, whose slice values have only
-#: 32-64 possible values (fixed-bucket O(N²/64) at 100 TB — VERDICT r02).
-_SIMHASH64_SLICES = (
-    "array(named_struct('sid', 0, 'sval', simhash & 1048575), "
-    "named_struct('sid', 1, 'sval', shiftright(simhash, 20) & 1048575), "
-    "named_struct('sid', 2, 'sval', shiftright(simhash, 40) & 1048575))"
-)
-
 
 @query(
     "dedup_simhash64",
     oracle=f"""
-WITH {_SQL_CANDIDATES_EXACT}, {_SQL_SIMHASH64.rstrip()}
-SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-FROM sims64 a JOIN sims64 b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= 2""",
+WITH {_SQL_CANDIDATES_EXACT}, {_sql_simhash(_SIMHASH64_BITS).rstrip()}{_SQL_SIMHASH_PAIRS}""",
 )
 def dedup_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs on the WIDE (60-bit) signature, Hamming ≤ 2 —
     the Manku/Jain/Sarma web-crawl design (WWW'07, public) re-expressed as
     DataFrame ops, and the variant of ``dedup_simhash`` whose candidate
-    join survives 100 TB: slice values are 20-bit content-derived hashes
-    (~2^20 cardinality) instead of the 16-bit operator's 32-64 fixed
-    buckets, so per-bucket membership is bounded by true near-duplicates,
-    not N/64.
+    join survives 100 TB: its 3 x 20-bit slice values are content-derived
+    hashes (~2^20 cardinality) instead of the 16-bit operator's 32-64
+    fixed buckets, so per-bucket membership is bounded by true
+    near-duplicates, not N/64.
 
     Radius 2 on a 60-bit word-level signature is tight (the synthetic
     drop-one-word near-dups land at ~4-8 bits), so this query plants EXACT
@@ -539,8 +546,7 @@ def dedup_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     finds EVERY pair within the radius, identical to the oracle's all-pairs
     scan — is exercised regardless of how near the planted pairs are."""
     return _simhash_pairs(
-        _simhash(_candidates_exact(spark, sf_dir), bits=_SIMHASH64_BITS),
-        _SIMHASH64_SLICES,
+        _simhash(_candidates_exact(spark, sf_dir), _SIMHASH64_BITS), _SIMHASH64_BITS
     )
 
 
@@ -615,16 +621,11 @@ def jaccard_pairs_frame(cand: DataFrame) -> DataFrame:
     """The blocked-Jaccard pair operator over any (doc_id, text) frame —
     the plant-free production path the job CLI runs on real corpora."""
     sh = track_persist(_shingle_array(cand))  # scanned 3x otherwise (keys + both verify sides)
-    pairs = _blocked_candidate_pairs(sh)
-    sa, sb = sh.alias("sa"), sh.alias("sb")
-    jac = F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh"))).cast(
-        "double"
-    ) / F.size(F.array_union(F.col("sa.sh"), F.col("sb.sh")))
+    # gates on the UNROUNDED Jaccard, reports it rounded (the oracle law)
     return (
-        pairs.join(sa, F.col("sa.doc_id") == F.col("a_id"))
-        .join(sb, F.col("sb.doc_id") == F.col("b_id"))
-        .select("a_id", "b_id", F.round(jac, 4).alias("jaccard"))
-        .filter(jac >= 0.3)
+        _jaccard(_blocked_candidate_pairs(sh), sh)
+        .filter(F.col("j") >= 0.3)
+        .select("a_id", "b_id", F.round("j", 4).alias("jaccard"))
     )
 
 
@@ -862,7 +863,7 @@ def dedup_campaign_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds exactly one extra shuffle (the left_anti join on doc_id). At
     100 TB the cluster labels are the small side by construction
     (|duplicates| << |corpus|), so AQE turns the anti-join into a broadcast."""
-    return dedup_campaign(spark, sf_dir, pair_source="jaccard")
+    return campaign_keep_frame(_candidates_near(spark, sf_dir), "jaccard")
 
 
 @query(
@@ -881,32 +882,26 @@ def dedup_campaign_keep_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded b×r candidates → jaccard ≥ 0.5 verify → connected components →
     keep list. At 100 TB this is the path to run — pair generation cost is
     bounded by two-minhash band collisions instead of bottom-k blocking."""
-    return dedup_campaign(spark, sf_dir, pair_source="minhash_lsh")
-
-
-def dedup_campaign(
-    spark: SparkSession, sf_dir: str, pair_source: str = "jaccard"
-) -> DataFrame:
-    """Job-facing campaign with a pluggable pair source:
-
-    * ``"jaccard"`` — ``ngram_jaccard_pairs`` (bottom-2 shingle blocking,
-      threshold 0.3): the exact, non-probabilistic baseline.
-    * ``"minhash_lsh"`` — ``dedup_minhash_lsh`` (banded b=4 × r=2 LSH,
-      verified jaccard ≥ 0.5): the probabilistic web-scale path.
-
-    Both compose the same cluster → keep-list tail; the pair stage is the
-    only difference, so the two keep lists agree wherever the pair sets
-    agree (pytest asserts exact agreement on the planted duplicates)."""
-    return campaign_keep_frame(_candidates_near(spark, sf_dir), pair_source)
+    return campaign_keep_frame(_candidates_near(spark, sf_dir), "minhash_lsh")
 
 
 def campaign_keep_frame(
     docs: DataFrame, pair_source: str = "jaccard"
 ) -> DataFrame:
-    """The PRODUCTION campaign over any (doc_id, text) frame — no planted
-    duplicates, the shape `python -m tesserocr_spark --dedup-campaign` runs
-    on a real corpus: pairs (pluggable source) → connected components →
-    keep-list anti-join returning surviving doc_ids."""
+    """The campaign over any (doc_id, text) frame — the shape
+    `python -m tesserocr_spark --dedup-campaign` runs on a real corpus and
+    the two campaign queries run over planted candidates: pairs →
+    connected components → keep-list anti-join returning surviving doc_ids.
+    The pair source is pluggable:
+
+    * ``"jaccard"`` — ``jaccard_pairs_frame`` (bottom-2 shingle blocking,
+      threshold 0.3): the exact, non-probabilistic baseline.
+    * ``"minhash_lsh"`` — ``minhash_lsh_pairs_frame`` (banded b=4 × r=2
+      LSH, verified jaccard ≥ 0.5): the probabilistic web-scale path.
+
+    The pair stage is the only difference, so the two keep lists agree
+    wherever the pair sets agree (pytest asserts exact agreement on the
+    planted duplicates)."""
     sources = {"jaccard": jaccard_pairs_frame, "minhash_lsh": minhash_lsh_pairs_frame}
     try:
         pair_fn = sources[pair_source]
@@ -937,7 +932,7 @@ _SENT_FREQ_DROP = 3
 _BOILER_SENT = "subscribe to our newsletter for updates"
 
 
-def _sentence_flags(docs: DataFrame, drop_freq: int = _SENT_FREQ_DROP) -> DataFrame:
+def _sentence_flags(docs: DataFrame) -> DataFrame:
     """(doc_id, pos, sent, dropped) — every sentence of every document with
     its global-frequency drop verdict. Shared by the oracle query and the
     production text-cleaning operator so the law lives once.
@@ -966,32 +961,45 @@ def _sentence_flags(docs: DataFrame, drop_freq: int = _SENT_FREQ_DROP) -> DataFr
     )
     return sents.join(freq, "sk", "left").select(
         "doc_id", "pos", "sent",
-        ((F.col("sent") != "") & (F.col("n") >= drop_freq)).alias("dropped"),
+        ((F.col("sent") != "") & (F.col("n") >= _SENT_FREQ_DROP)).alias("dropped"),
     )
 
 
-def sentence_dedup_frame(
-    docs: DataFrame, drop_freq: int = _SENT_FREQ_DROP
-) -> DataFrame:
-    """PRODUCTION C4-style sentence dedup over any (doc_id, text) frame —
-    no planting: returns (doc_id, text) with every globally-frequent
-    sentence (>= drop_freq corpus-wide occurrences) removed and the
-    remainder rejoined in original order. The text-cleaning stage a
-    pretraining pipeline runs before tokenization; shipped in the job CLI
-    as ``--sentence-dedup``."""
-    flagged = _sentence_flags(
-        docs.select("doc_id", F.trim("text").alias("text")), drop_freq
-    )
+def _sentence_regroup(docs: DataFrame) -> DataFrame:
+    """(doc_id, n_sents, n_dropped, text) — each document's sentence count,
+    dropped-sentence count and surviving text (kept sentences rejoined in
+    original order). The one regroup behind the oracle query and the
+    production cleaner; ColumnPruning drops the counts the cleaner never
+    reads."""
+    # collect_list skips the NULLs when() leaves for dropped sentences;
+    # sort_array orders by the leading pos field -> original sentence order
     kept_struct = F.when(~F.col("dropped"), F.struct("pos", "sent"))
     return (
-        flagged.groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list(kept_struct)).alias("kept"))
+        _sentence_flags(docs).groupBy("doc_id")
+        .agg(
+            F.count("*").cast("bigint").alias("n_sents"),
+            F.sum(F.when(F.col("dropped"), 1).otherwise(0)).cast("bigint")
+            .alias("n_dropped"),
+            F.sort_array(F.collect_list(kept_struct)).alias("kept"),
+        )
         .select(
-            "doc_id",
+            "doc_id", "n_sents", "n_dropped",
             F.array_join(F.expr("transform(kept, x -> x.sent)"), ". ")
             .alias("text"),
         )
     )
+
+
+def sentence_dedup_frame(docs: DataFrame) -> DataFrame:
+    """PRODUCTION C4-style sentence dedup over any (doc_id, text) frame —
+    no planting: returns (doc_id, text) with every globally-frequent
+    sentence (>= _SENT_FREQ_DROP corpus-wide occurrences) removed and the
+    remainder rejoined in original order. The text-cleaning stage a
+    pretraining pipeline runs before tokenization; shipped in the job CLI
+    as ``--sentence-dedup``."""
+    return _sentence_regroup(
+        docs.select("doc_id", F.trim("text").alias("text"))
+    ).select("doc_id", "text")
 
 
 @query(
@@ -1051,24 +1059,8 @@ def dedup_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat("text", F.lit(f". {_BOILER_SENT}")),
         ).otherwise(F.col("text")).alias("text"),
     )
-    flagged = _sentence_flags(planted)
-    # collect_list skips the NULLs when() leaves for dropped sentences;
-    # array_sort orders by the leading pos field -> original sentence order
-    kept_struct = F.when(~F.col("dropped"), F.struct("pos", "sent"))
-    return (
-        flagged.groupBy("doc_id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_sents"),
-            F.sum(F.when(F.col("dropped"), 1).otherwise(0)).cast("bigint")
-            .alias("n_dropped"),
-            F.sort_array(F.collect_list(kept_struct)).alias("kept"),
-        )
-        .select(
-            "doc_id", "n_sents", "n_dropped",
-            F.md5(
-                F.array_join(F.expr("transform(kept, x -> x.sent)"), ". ")
-            ).alias("kept_fp"),
-        )
+    return _sentence_regroup(planted).select(
+        "doc_id", "n_sents", "n_dropped", F.md5("text").alias("kept_fp")
     )
 
 
@@ -1103,18 +1095,18 @@ def _sub_word_arrays(docs: DataFrame) -> DataFrame:
     )
 
 
-def _sub_gram_occurrences(words: DataFrame, width: int = _SUB_W) -> DataFrame:
-    """(doc_id, pos, gk, packed) — every width-word window of every
+def _sub_gram_occurrences(words: DataFrame) -> DataFrame:
+    """(doc_id, pos, gk, packed) — every _SUB_W-word window of every
     document, keyed by md5 of the space-joined window (16-byte join keys,
     same skew hardening as sentence dedup)."""
     return words.select(
         "doc_id",
         F.explode(
             F.expr(
-                f"CASE WHEN size(w) >= {width} THEN "
-                f"transform(sequence(1, size(w) - {width} + 1), "
+                f"CASE WHEN size(w) >= {_SUB_W} THEN "
+                f"transform(sequence(1, size(w) - {_SUB_W} + 1), "
                 f"i -> named_struct('pos', i, "
-                f"'gk', md5(array_join(slice(w, i, {width}), ' ')))) "
+                f"'gk', md5(array_join(slice(w, i, {_SUB_W}), ' ')))) "
                 "ELSE cast(array() as array<struct<pos:int,gk:string>>) END"
             )
         ).alias("o"),
@@ -1126,12 +1118,12 @@ def _sub_gram_occurrences(words: DataFrame, width: int = _SUB_W) -> DataFrame:
     )
 
 
-def _sub_covered(words: DataFrame, width: int = _SUB_W) -> DataFrame:
+def _sub_covered(words: DataFrame) -> DataFrame:
     """(doc_id, cov: array<int>) — word positions covered by a duplicated
     window occurrence that is NOT the corpus-wide canonical (packed-order
     first) copy. Shape: one gk-keyed aggregate (map-side combine), one
     gk equi-join, one per-doc regroup — no windows, no collect."""
-    occ = _sub_gram_occurrences(words, width)
+    occ = _sub_gram_occurrences(words)
     freq = occ.groupBy("gk").agg(
         F.count("*").alias("n"), F.min("packed").alias("first_packed")
     )
@@ -1141,7 +1133,7 @@ def _sub_covered(words: DataFrame, width: int = _SUB_W) -> DataFrame:
     return (
         dup.select(
             "doc_id",
-            F.explode(F.expr(f"sequence(pos, pos + {width} - 1)")).alias("p"),
+            F.explode(F.expr(f"sequence(pos, pos + {_SUB_W} - 1)")).alias("p"),
         )
         .distinct()
         .groupBy("doc_id")
@@ -1149,21 +1141,36 @@ def _sub_covered(words: DataFrame, width: int = _SUB_W) -> DataFrame:
     )
 
 
-def _sub_kept_words_expr() -> str:
-    """Words at uncovered positions, original order (cov2 = null-safe
-    covered-position array)."""
+def _sub_kept(docs: DataFrame) -> DataFrame:
+    """(doc_id, w, cov2, kept) — each document's word array, its covered
+    positions (``cov2``, empty when none) and its surviving text: the
+    words at uncovered positions, rejoined in order. The one rebuild
+    behind the scan query and the production cleaner."""
+    words = _sub_word_arrays(docs)
     return (
-        "transform(filter(transform(sequence(1, size(w)), "
-        "i -> named_struct('i', i, 'wd', w[i - 1])), "
-        "s -> NOT array_contains(cov2, s.i)), s -> s.wd)"
+        words.join(_sub_covered(words), "doc_id", "left")
+        .select(
+            "doc_id",
+            "w",
+            F.coalesce(F.col("cov"), F.expr("cast(array() as array<int>)"))
+            .alias("cov2"),
+        )
+        .select(
+            "doc_id", "w", "cov2",
+            F.array_join(F.expr(
+                "transform(filter(transform(sequence(1, size(w)), "
+                "i -> named_struct('i', i, 'wd', w[i - 1])), "
+                "s -> NOT array_contains(cov2, s.i)), s -> s.wd)"
+            ), " ").alias("kept"),
+        )
     )
 
 
-def substring_dedup_frame(docs: DataFrame, width: int = _SUB_W) -> DataFrame:
+def substring_dedup_frame(docs: DataFrame) -> DataFrame:
     """PRODUCTION exact-substring dedup over any (doc_id, text) frame —
     the ExactSubstr pass of Lee et al. 2022 ("Deduplicating Training Data
     Makes Language Models Better", public method re-expressed as DataFrame
-    ops) at word granularity: every ``width``-word window that occurs more
+    ops) at word granularity: every ``_SUB_W``-word window that occurs more
     than once corpus-wide is removed from every document except the
     packed-(doc_id, pos)-order first occurrence, and the surviving words
     are rejoined in order. Returns (doc_id, text). Shipped in the job CLI
@@ -1174,20 +1181,8 @@ def substring_dedup_frame(docs: DataFrame, width: int = _SUB_W) -> DataFrame:
     sentence-dedup skew note (global boilerplate = hottest keys; AQE
     skewJoin enabled in the job CLI). No collect, no global window;
     per-doc state is bounded by document length."""
-    words = _sub_word_arrays(docs.select("doc_id", F.trim("text").alias("text")))
-    cov = _sub_covered(words, width)
-    return (
-        words.join(cov, "doc_id", "left")
-        .select(
-            "doc_id",
-            "w",
-            F.coalesce(F.col("cov"), F.expr("cast(array() as array<int>)"))
-            .alias("cov2"),
-        )
-        .select(
-            "doc_id",
-            F.array_join(F.expr(_sub_kept_words_expr()), " ").alias("text"),
-        )
+    return _sub_kept(docs.select("doc_id", F.trim("text").alias("text"))).select(
+        "doc_id", F.col("kept").alias("text")
     )
 
 
@@ -1258,22 +1253,10 @@ def dedup_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat("text", F.lit(f" {_SUB_PASSAGE}")),
         ).otherwise(F.col("text")).alias("text"),
     )
-    words = _sub_word_arrays(planted)
-    cov = _sub_covered(words)
-    kept = _sub_kept_words_expr()
-    return (
-        words.join(cov, "doc_id", "left")
-        .select(
-            "doc_id",
-            "w",
-            F.coalesce(F.col("cov"), F.expr("cast(array() as array<int>)"))
-            .alias("cov2"),
-        )
-        .select(
-            F.col("doc_id").cast("bigint").alias("doc_id"),
-            F.size("w").cast("bigint").alias("n_words"),
-            F.size("cov2").cast("bigint").alias("n_dup_words"),
-            F.round(F.size("cov2") / F.size("w"), 4).alias("dup_frac"),
-            F.md5(F.array_join(F.expr(kept), " ")).alias("kept_fp"),
-        )
+    return _sub_kept(planted).select(
+        F.col("doc_id").cast("bigint").alias("doc_id"),
+        F.size("w").cast("bigint").alias("n_words"),
+        F.size("cov2").cast("bigint").alias("n_dup_words"),
+        F.round(F.size("cov2") / F.size("w"), 4).alias("dup_frac"),
+        F.md5("kept").alias("kept_fp"),
     )

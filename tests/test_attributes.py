@@ -109,6 +109,19 @@ def test_connected_components(spark):
     api.end()
 
 
+def test_layout_views_leave_no_cached_frame(spark):
+    """analyse_layout and get_connected_components cache nothing that
+    end() would leave behind: afterwards the session's cache manager holds
+    no more entries than before set_pages."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.cachedData().size()
+    api = _api(spark, [STYLED])
+    assert api.analyse_layout().count() > 0
+    assert api.get_connected_components().count() > 0
+    api.end()
+    assert cm.cachedData().size() <= before
+
+
 TWO_PARAS = b"""<main><p>The quick brown fox</p><p>jumps over lazy dogs</p></main>"""
 
 

@@ -190,38 +190,39 @@ class TestDedup:
         }
         assert all(got.get(p) == 0 for p in planted)
 
-    def test_simhash64_pigeonhole_complete_at_radius_1_2(self, spark):
+    @pytest.mark.parametrize("bits", [16, 60])
+    def test_simhash64_pigeonhole_complete_at_radius_1_2(self, spark, bits):
         """ADVICE r03: the exact-copy plants only exercise hamming 0. Flip
-        1-2 signature bits directly and assert the 3×20-bit slice-blocked
-        join still returns EVERY pair an all-pairs scan finds — including
-        pairs that agree on only one slice."""
+        1-2 signature bits directly and assert the 3-slice blocked join
+        still returns EVERY pair an all-pairs scan finds — including pairs
+        that agree on only one slice — at both signature widths (6+5+5
+        slices at 16 bits, 3×20 at 60)."""
         from tesserocr_spark.queries.dedup import (
-            _SIMHASH64_BITS,
-            _SIMHASH64_SLICES,
             _candidates_exact,
             _simhash,
             _simhash_pairs,
         )
 
         base = (
-            _simhash(_candidates_exact(spark, SF_DIR), bits=_SIMHASH64_BITS)
+            _simhash(_candidates_exact(spark, SF_DIR), bits)
             .filter(F.col("doc_id") < 100000)
             .limit(30)
             .collect()
         )
         rows = [(r.doc_id, r.simhash) for r in base]
+        lo = bits - 2 * (bits // 3)  # slice 0's width: 6 at 16 bits, 20 at 60
         for r in base:
-            b1 = r.doc_id % _SIMHASH64_BITS
+            b1 = r.doc_id % bits
             # hamming-1 perturbation
             rows.append((r.doc_id + 200000, r.simhash ^ (1 << b1)))
-            # hamming-2, bits chosen to span TWO different 20-bit slices so
+            # hamming-2, bits chosen to span TWO different slices so
             # exactly one slice can match
-            b2 = (b1 + 20) % _SIMHASH64_BITS
+            b2 = (b1 + lo) % bits
             rows.append((r.doc_id + 300000, r.simhash ^ (1 << b1) ^ (1 << b2)))
         sig = spark.createDataFrame(rows, "doc_id long, simhash long")
         got = {
             (r.a_id, r.b_id)
-            for r in _simhash_pairs(sig, _SIMHASH64_SLICES).collect()
+            for r in _simhash_pairs(sig, bits).collect()
         }
         expected = {
             (a_id, b_id)
@@ -277,7 +278,8 @@ class TestDedup:
         import pytest as _pytest
 
         from tesserocr_spark.queries.dedup import (
-            dedup_campaign,
+            _candidates_near,
+            campaign_keep_frame,
             dedup_campaign_keep,
             dedup_campaign_keep_lsh,
         )
@@ -302,7 +304,7 @@ class TestDedup:
         # both paths agree on every planted original's fate
         assert (planted & kept_j) == (planted & kept_l)
         with _pytest.raises(ValueError, match="pair_source"):
-            dedup_campaign(spark, SF_DIR, pair_source="nope")
+            campaign_keep_frame(_candidates_near(spark, SF_DIR), "nope")
 
     def test_sentence_dedup_strips_planted_boilerplate(self, spark):
         """C4-style cross-corpus sentence dedup: the planted boilerplate
@@ -348,6 +350,24 @@ class TestDedup:
         cleaned = {r.doc_id: r.text for r in sentence_dedup_frame(planted).collect()}
         for r in orig.collect():
             assert cleaned[r.doc_id] == r.text, r.doc_id
+        # over dedup_sentences' own planted input, its kept_fp is the md5
+        # of this frame's text, doc by doc
+        import hashlib
+
+        from tesserocr_spark.queries.dedup import _BOILER_SENT, dedup_sentences
+
+        q_planted = orig.select(
+            "doc_id",
+            F.when(
+                F.col("doc_id") % 6 == 0,
+                F.concat("text", F.lit(f". {_BOILER_SENT}")),
+            ).otherwise(F.col("text")).alias("text"),
+        )
+        fp = {r.doc_id: r.kept_fp for r in dedup_sentences(spark, SF_DIR).collect()}
+        assert fp == {
+            r.doc_id: hashlib.md5(r.text.encode()).hexdigest()
+            for r in sentence_dedup_frame(q_planted).collect()
+        }
 
     def test_sentence_dedup_survives_planted_hot_key(self, spark):
         """VERDICT r04 task #5 (skew): plant ONE long sentence in 30% of
@@ -1257,6 +1277,30 @@ class TestSubstringDedup:
                     ).hexdigest(), i
                     exact_passage_only += 1
         assert exact_passage_only > 0
+
+    def test_scan_fingerprints_the_frame_text(self, spark):
+        """Over dedup_substrings' own planted input, its kept_fp is the md5
+        of substring_dedup_frame's text, doc by doc."""
+        import hashlib
+
+        from tesserocr_spark.queries.dedup import (
+            _SUB_PASSAGE,
+            dedup_substrings,
+            substring_dedup_frame,
+        )
+
+        planted = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+            "doc_id",
+            F.when(
+                F.col("doc_id") % 5 == 0,
+                F.concat(F.trim("text"), F.lit(f" {_SUB_PASSAGE}")),
+            ).otherwise(F.trim("text")).alias("text"),
+        )
+        fp = {r.doc_id: r.kept_fp for r in dedup_substrings(spark, SF_DIR).collect()}
+        assert fp == {
+            r.doc_id: hashlib.md5(r.text.encode()).hexdigest()
+            for r in substring_dedup_frame(planted).collect()
+        }
 
     def test_frame_removes_all_but_first_occurrence(self, spark):
         """Production path: cross-doc AND within-doc duplicated windows

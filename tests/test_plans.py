@@ -67,16 +67,17 @@ def test_single_arrow_eval_for_full_extract(spark):
 
 
 def test_single_arrow_eval_for_spans_views_of_unpersisted_extract(spark):
-    """spans_long (and tsv_sink over it) on an unpersisted extract_pages
-    frame runs the extractor once: a plain posexplode made the optimizer
-    infer ``size(spans) > 0`` below the projection and evaluate the UDF a
-    second time for that filter alone."""
+    """spans_long (and tsv_sink over it) and word_recognition_language on
+    an unpersisted extract_pages frame run the extractor once: a plain
+    (pos)explode made the optimizer infer ``size(spans) > 0`` below the
+    projection and evaluate the UDF a second time for that filter alone."""
     from tesserocr_spark.api import extract_pages, spans_long
+    from tesserocr_spark.attributes import word_recognition_language
     from tesserocr_spark.pages import synthetic_pages
     from tesserocr_spark.sinks import tsv_sink
 
     pages = synthetic_pages(spark, 10)
-    for view in (spans_long, tsv_sink):
+    for view in (spans_long, tsv_sink, word_recognition_language):
         assert _plan(view(extract_pages(pages))).count("ArrowEvalPython") == 1, view
 
 
@@ -270,6 +271,25 @@ def test_minhash_lsh_hashes_each_shingle_once(spark):
         assert "md5(" in opt, q.__name__
 
 
+def test_simhash_hashes_each_word_once(spark):
+    """Each word's md5 hash is computed once, in the persisted word-hash
+    frame — never under the per-bit signature projection, where
+    CollapseProject would inline it into every bit's lambda and hash each
+    word 16 (or 60) times."""
+    from tesserocr_spark.queries.dedup import (
+        dedup_simhash,
+        dedup_simhash64,
+        simhash_signatures,
+    )
+
+    for q in (simhash_signatures, dedup_simhash, dedup_simhash64):
+        opt = q(spark, SF_DIR)._jdf.queryExecution().optimizedPlan().toString()
+        per_bit = [ln for ln in opt.splitlines() if "shiftright(" in ln]
+        assert per_bit, f"{q.__name__}: no per-bit projection in the plan"
+        assert not [ln for ln in per_bit if "md5(" in ln], q.__name__
+        assert "md5(" in opt, q.__name__
+
+
 def test_simhash_pairs_use_equi_join_not_allpairs(spark):
     """Pigeonhole bit-slice blocking must reach the join as equi keys — an
     all-pairs theta join (BNLJ/cartesian) is the O(N²) scale-killer."""
@@ -297,14 +317,14 @@ def test_simhash64_slice_keys_content_derived(spark):
 
     from tesserocr_spark.queries.dedup import (
         _SIMHASH64_BITS,
-        _SIMHASH64_SLICES,
         _candidates_exact,
         _simhash,
+        _simhash_slices,
     )
 
-    s = _simhash(_candidates_exact(spark, SF_DIR), bits=_SIMHASH64_BITS)
+    s = _simhash(_candidates_exact(spark, SF_DIR), _SIMHASH64_BITS)
     keys = (
-        s.select(F.explode(F.expr(_SIMHASH64_SLICES)).alias("p"))
+        s.select(F.explode(F.expr(_simhash_slices(_SIMHASH64_BITS))).alias("p"))
         .select("p.sid", "p.sval")
         .distinct()
         .count()
