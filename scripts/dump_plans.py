@@ -2,10 +2,19 @@
 
 The plan-shape assertions live in tests/test_plans.py; this file is the
 human-readable evidence (pushdown, pruning, broadcast, single Python stage).
+
+``--codegen SF_DIR [QUERY ...]`` instead probes the codegen cache: in a
+session whose cache holds 1000 classes (Spark's default is 100) it runs
+each query twice and prints, per query, the Spark jobs and stages of the
+first run and the classes each run compiled. The first run's compiles are
+the cache entries the query adds; the second run's must be 0. QUERY names
+a registry query or ``spans_agg`` (the benchmark's span-count shape); the
+default is the benchmark's corpus_ops mix, in its order.
 """
 
 from __future__ import annotations
 
+import argparse
 import io
 import os
 import sys
@@ -13,9 +22,65 @@ from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+sys.path.insert(1, os.path.join(REPO, "perfbench"))
+
+
+def codegen_probe(sf: str, names: list[str]) -> None:
+    """Print jobs, stages and codegen compiles per query (module docstring)."""
+    from pyspark.sql import SparkSession
+
+    import session
+    from corpus_ops import MIX, spans_agg
+    from tesserocr_spark.queries import QUERIES, registry
+    from tracing import SparkCounters
+
+    cores = session.host_cores()
+    spark = (
+        SparkSession.builder.master(f"local[{cores}]")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics  # noqa: SLF001
+    counters = SparkCounters(spark)
+    total = [0, 0, 0, 0]
+    print(f"{'query':28} {'jobs':>5} {'stages':>6} {'new':>5} {'again':>5}")
+    for name in names or MIX:
+        build = spans_agg if name == "spans_agg" else QUERIES[name]
+        runs = []
+        for _ in range(2):
+            before = compiles.METRIC_COMPILATION_TIME().getCount()
+            with counters.group(name) as counts:
+                build(spark, sf).toPandas()
+            registry.release_cache()
+            runs.append((counts, compiles.METRIC_COMPILATION_TIME().getCount() - before))
+        (first, new), (_, again) = runs
+        row = (first["jobs"], first["stages"], new, again)
+        total = [t + x for t, x in zip(total, row)]
+        print(f"{name:28} {row[0]:5d} {row[1]:6d} {row[2]:5d} {row[3]:5d}")
+    print(f"{'total':28} {total[0]:5d} {total[1]:6d} {total[2]:5d} {total[3]:5d}")
+    spark.stop()
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--codegen", metavar="SF_DIR",
+                    help="probe the codegen cache over SF_DIR instead of dumping plans")
+    ap.add_argument("queries", nargs="*", metavar="QUERY")
+    args = ap.parse_args()
+    if args.codegen:
+        codegen_probe(args.codegen, args.queries)
+        return
+    if args.queries:
+        ap.error("QUERY names need --codegen")
+
     from pyspark.sql import SparkSession
 
     spark = (

@@ -80,24 +80,30 @@ def lineage_rows(docs_with_bucket: DataFrame) -> DataFrame:
     )
 
 
-def completed_buckets(spark: SparkSession, lineage_path: str) -> DataFrame:
-    """Buckets already recorded in the lineage table (empty if none yet)."""
+def completed_buckets(spark: SparkSession, lineage_path: str) -> list[int]:
+    """Bucket ids already recorded in the lineage table (empty if none
+    yet), collected on the driver: at most ``n_buckets`` ints. A list, not
+    a frame over the lineage path: once the job appends to that path,
+    Spark recomputes cached plans that read it, and a resumed run's
+    persisted docs would come out empty."""
     try:
-        return spark.read.parquet(lineage_path).select("bucket").distinct()
+        rows = spark.read.parquet(lineage_path).select("bucket").distinct().collect()
     except Exception:  # noqa: BLE001 — first run: no lineage yet
-        return spark.createDataFrame([], "bucket int")
+        return []
+    return sorted(r.bucket for r in rows)
+
+
+def _pending(pages: DataFrame, n_buckets: int, done: list[int]) -> DataFrame:
+    """``pages`` with their bucket, minus the buckets in ``done``."""
+    todo = with_bucket(pages, n_buckets)
+    return todo.filter(~F.col("bucket").isin(done)) if done else todo
 
 
 def remaining_pages(
     pages: DataFrame, lineage_path: str, n_buckets: int = DEFAULT_BUCKETS
 ) -> DataFrame:
     """Checkpoint resume: pages whose bucket has no completed lineage row."""
-    spark = pages.sparkSession
-    done = completed_buckets(spark, lineage_path)
-    return (
-        with_bucket(pages, n_buckets)
-        .join(F.broadcast(done), "bucket", "left_anti")
-    )
+    return _pending(pages, n_buckets, completed_buckets(pages.sparkSession, lineage_path))
 
 
 def process_pages(
@@ -124,12 +130,9 @@ def process_pages(
     docs_path = f"{outputbase}.docs"
     lineage_path = f"{outputbase}.lineage"
 
-    todo = remaining_pages(pages, lineage_path, n_buckets) if resume else with_bucket(
-        pages, n_buckets
-    )
-    n_skipped = 0
-    if resume:
-        n_skipped = completed_buckets(spark, lineage_path).count()
+    done = completed_buckets(spark, lineage_path) if resume else []
+    todo = _pending(pages, n_buckets, done)
+    n_skipped = len(done)
 
     n_part = max(spark.sparkContext.defaultParallelism, 1)
     todo = salted_repartition(todo, n_part)

@@ -261,7 +261,13 @@ def decode_png_pixels(payload: bytes) -> bytes | None:
     raw bytes in display order, or None when the stream is outside the
     subset or inconsistent — never raises on corpus data."""
     meta = parse_png(payload)
-    if meta is None or meta["bpp"] != meta["n_channels"] * 8:
+    return None if meta is None else _png_pixels(payload, meta)
+
+
+def _png_pixels(payload: bytes, meta: dict) -> bytes | None:
+    """``decode_png_pixels`` of a payload that ``parse_png`` accepted as
+    ``meta``: the stats kernel parses each header once."""
+    if meta["bpp"] != meta["n_channels"] * 8:
         return None
     ihdr_off = len(_PNG_SIG) + 8
     interlace = payload[ihdr_off + 12]
@@ -749,8 +755,12 @@ def decode_gif_pixels(payload: bytes) -> bytes | None:
     interlaced frames (GIF89a Appendix E four-pass row layout) are
     de-interlaced. None (never an exception) on anything malformed."""
     meta = parse_gif(payload)
-    if meta is None:
-        return None
+    return None if meta is None else _gif_pixels(payload, meta)
+
+
+def _gif_pixels(payload: bytes, meta: dict) -> bytes | None:
+    """``decode_gif_pixels`` of a payload that ``parse_gif`` accepted as
+    ``meta``: the stats kernel parses each header once."""
     off = 13
     if payload[10] & 0x80:
         off += 3 * (1 << ((payload[10] & 0x07) + 1))
@@ -1137,10 +1147,16 @@ def decode_jpeg_pixels(payload: bytes) -> bytes | None:
     marker and reset the DC predictor every interval (ITU T.81 E.2.4).
     Progressive (SOF2) and multi-component streams return None — as does
     anything malformed (never raises on corpus data)."""
+    meta = parse_jpeg(payload)
+    return None if meta is None else _jpeg_pixels(payload, meta)
+
+
+def _jpeg_pixels(payload: bytes, meta: dict) -> bytes | None:
+    """``decode_jpeg_pixels`` of a payload that ``parse_jpeg`` accepted as
+    ``meta``: the stats kernel parses each header once."""
     import numpy as np
 
-    meta = parse_jpeg(payload)
-    if meta is None or meta["n_channels"] != 1 or meta["bpp"] != 8:
+    if meta["n_channels"] != 1 or meta["bpp"] != 8:
         return None
     qtables: dict[int, list[int]] = {}
     htables: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
@@ -1657,7 +1673,13 @@ def decode_pnm_pixels(payload: bytes) -> bytes | None:
     width × channels sample bytes. P4 bit-packed rows are not expanded
     (parse-only). None on anything malformed."""
     meta = parse_pnm(payload)
-    if meta is None or payload[1] == 0x34:
+    return None if meta is None else _pnm_pixels(payload, meta)
+
+
+def _pnm_pixels(payload: bytes, meta: dict) -> bytes | None:
+    """``decode_pnm_pixels`` of a payload that ``parse_pnm`` accepted as
+    ``meta``: the stats kernel parses each header once."""
+    if payload[1] == 0x34:
         return None
     parsed = _pnm_tokens(payload, 3)
     if parsed is None:
@@ -1757,15 +1779,16 @@ def _header_stats(names: list[str], meta: dict | None, px: bytes | None) -> tupl
 def _image_rows(
     columns: list[str],
     parse: Callable[[bytes], dict | None],
-    decode: Callable[[bytes], bytes | None],
+    decode: Callable[[bytes, dict], bytes | None],
     doc_id: int,
     payload: bytes | None,
 ) -> list[tuple]:
     """``rows_of`` for a one-raster codec: one row of header fields and
     raster stats, all zero unless both ``parse`` and ``decode`` accept the
-    payload."""
+    payload. ``decode`` is the codec's pixel body, which takes the header
+    ``parse`` returned instead of parsing it again."""
     meta = None if payload is None else parse(payload)
-    px = decode(payload) if meta else None
+    px = decode(payload, meta) if meta else None
     return [(doc_id, *_header_stats(columns[1:], meta, px))]
 
 
@@ -2125,7 +2148,7 @@ def pixel_stats_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     instead of failing the scan."""
     cols = _names(PIXEL_STATS_SCHEMA)
     return _per_payload(
-        batches, cols, partial(_image_rows, cols, parse_png, decode_png_pixels)
+        batches, cols, partial(_image_rows, cols, parse_png, _png_pixels)
     )
 
 
@@ -2155,7 +2178,7 @@ def gif_stats_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     ``pixel_stats_map``."""
     cols = _names(GIF_STATS_SCHEMA)
     return _per_payload(
-        batches, cols, partial(_image_rows, cols, parse_gif, decode_gif_pixels)
+        batches, cols, partial(_image_rows, cols, parse_gif, _gif_pixels)
     )
 
 
@@ -2202,7 +2225,7 @@ def jpeg_stats_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     all-zero — never-dies law."""
     cols = _names(JPEG_STATS_SCHEMA)
     return _per_payload(
-        batches, cols, partial(_image_rows, cols, parse_jpeg, decode_jpeg_pixels)
+        batches, cols, partial(_image_rows, cols, parse_jpeg, _jpeg_pixels)
     )
 
 
@@ -2269,7 +2292,7 @@ def pnm_stats_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     Non-PNM / malformed payloads report all-zero — never-dies law."""
     cols = _names(PNM_STATS_SCHEMA)
     return _per_payload(
-        batches, cols, partial(_image_rows, cols, parse_pnm, decode_pnm_pixels)
+        batches, cols, partial(_image_rows, cols, parse_pnm, _pnm_pixels)
     )
 
 

@@ -71,10 +71,15 @@ candidates AS (
 def _planted(d: DataFrame, copy_text) -> DataFrame:
     """``d`` (doc_id, text) plus a copy of every ``doc_id % 7 == 0`` row at
     ``doc_id + 100000`` whose text is the ``copy_text`` column."""
-    copies = d.filter(F.col("doc_id") % _PLANT_MOD == 0).select(
+    row = F.struct("doc_id", "text")
+    copy = F.struct(
         (F.col("doc_id") + _PLANT_OFFSET).alias("doc_id"), copy_text.alias("text")
     )
-    return d.unionByName(copies)
+    # one scan: each row explodes into itself and, when planted, its copy
+    rows = F.when(F.col("doc_id") % _PLANT_MOD == 0, F.array(row, copy)).otherwise(
+        F.array(row)
+    )
+    return d.select(F.explode(rows).alias("r")).select("r.doc_id", "r.text")
 
 
 def _candidates_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -141,19 +146,23 @@ def _shingle_array(cand: DataFrame) -> DataFrame:
     )
 
 
+def _jaccard_of(x: str, y: str):
+    """The UNROUNDED Jaccard of two distinct-shingle array columns (no
+    re-explode, no collect_set: the array IS the set). Each pair operator
+    applies its own gate to it."""
+    return F.size(F.array_intersect(F.col(x), F.col(y))).cast("double") / F.size(
+        F.array_union(F.col(x), F.col(y))
+    )
+
+
 def _jaccard(pairs: DataFrame, sh: DataFrame) -> DataFrame:
     """(a_id, b_id, j) — candidate pairs joined to both documents' distinct
-    shingle arrays, with ``j`` their UNROUNDED Jaccard (no re-explode, no
-    collect_set: the array IS the set). Each pair operator applies its own
-    gate to ``j``."""
+    shingle arrays, with ``j`` their ``_jaccard_of``."""
     sa, sb = sh.alias("sa"), sh.alias("sb")
-    j = F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh"))).cast(
-        "double"
-    ) / F.size(F.array_union(F.col("sa.sh"), F.col("sb.sh")))
     return (
         pairs.join(sa, F.col("sa.doc_id") == F.col("a_id"))
         .join(sb, F.col("sb.doc_id") == F.col("b_id"))
-        .select("a_id", "b_id", j.alias("j"))
+        .select("a_id", "b_id", _jaccard_of("sa.sh", "sb.sh").alias("j"))
     )
 
 
@@ -219,11 +228,11 @@ _MINHASH_ARRAY_EXPR = (
 #: r03 decorrelation fix inflated (BENCH_r03 dedup_minhash_lsh 5.68 s).
 _N_BANDS = 4
 
-_BAND_KEYS_EXPR = (
-    f"transform(sequence(0, {_N_BANDS - 1}), b -> named_struct("
-    "'band', cast(b as int), "
-    "'bkey', mh[2 * b] * cast(2147483648 as bigint) + mh[2 * b + 1]))"
-)
+#: the b packed band keys as one plain array over ``mh``, index = band.
+_BAND_KEYS_EXPR = "array(" + ", ".join(
+    f"mh[{2 * b}] * cast(2147483648 as bigint) + mh[{2 * b + 1}]"
+    for b in range(_N_BANDS)
+) + ")"
 
 _H31_EXPR = "transform(sh, s -> " + _HASH.format(x="s") + " % cast(2147483648 as bigint))"
 
@@ -239,9 +248,10 @@ def _shingle_hashes(cand: DataFrame) -> DataFrame:
 
 
 def _minhash_array(shh: DataFrame) -> DataFrame:
-    """(doc_id, mh: array<bigint>[8]) signature-array frame from a persisted
-    ``_shingle_hashes`` frame. Callers that go on to index ``mh`` inside a
-    lambda (the band-key build) MUST persist this frame too: Catalyst's
+    """(doc_id, sh, mh: array<bigint>[8]) signature-array frame from a
+    persisted ``_shingle_hashes`` frame; ``sh`` rides along for the band
+    join's verification. Callers that read ``mh`` more than once (the
+    band-key build, posexplode) persist this frame too: Catalyst's
     CollapseProject inlines a projected alias into every lambda reference,
     so an unpersisted ``mh`` is re-computed per reference — 8 references ×
     8 h31 evaluations ≈ 64× the md5 work (measured 2.6× wall on the whole
@@ -249,17 +259,19 @@ def _minhash_array(shh: DataFrame) -> DataFrame:
     BENCH/PLANS.md). A persisted frame makes ``mh[i]`` plain array indexing
     against the cached column."""
     return shh.filter(F.size("sh") > 0).select(
-        "doc_id", F.expr(_MINHASH_ARRAY_EXPR).alias("mh")
+        "doc_id", "sh", F.expr(_MINHASH_ARRAY_EXPR).alias("mh")
     )
 
 
 def _band_keys_from(mhf: DataFrame) -> DataFrame:
-    """(doc_id, band, bkey) banded-LSH keys from a (persisted) minhash-
-    array frame: one narrow projection, no shuffle until the downstream
-    bucket equi-join."""
-    return (
-        mhf.select("doc_id", F.explode(F.expr(_BAND_KEYS_EXPR)).alias("x"))
-        .select("doc_id", "x.band", "x.bkey")
+    """(doc_id, sh, bks, band, bkey) banded-LSH keys from a (persisted)
+    minhash-array frame, one row per band, each carrying the document's
+    4 band keys ``bks`` and its shingle array: one narrow projection, no
+    shuffle until the downstream bucket equi-join. ``posexplode_outer``
+    (``bks`` always has 4 keys) infers no ``size(bks) > 0`` filter to
+    evaluate below the projection."""
+    return mhf.select("doc_id", "sh", F.expr(_BAND_KEYS_EXPR).alias("bks")).select(
+        "doc_id", "sh", "bks", F.posexplode_outer("bks").alias("band", "bkey")
     )
 
 
@@ -321,12 +333,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + banded LSH near-dup detection: signature → b=4 × r=2
     band-key bucket self-join → Jaccard verification of candidates.
     Signatures, band keys and shingle sets are narrow array expressions;
-    the only wide shuffles are the (band, bkey) bucket equi-join and the
-    two doc_id-keyed verification joins — bucket sizes are bounded by
-    two-minhash collisions (P ≈ j² per band), not corpus size. The r=2
-    banding is what keeps the verify stage affordable: with r=1 any
-    single-minhash collision produced a candidate (see _BAND_KEYS_EXPR
-    note for the threshold curve)."""
+    the only wide shuffle is the (band, bkey) bucket equi-join, whose
+    rows carry both documents' shingle arrays, so each candidate is
+    verified where it is found — bucket sizes are bounded by two-minhash
+    collisions (P ≈ j² per band), not corpus size. The r=2 banding is
+    what keeps verification affordable: with r=1 any single-minhash
+    collision produced a candidate (see _BAND_KEYS_EXPR note for the
+    threshold curve)."""
     return minhash_lsh_pairs_frame(_candidates_near(spark, sf_dir))
 
 
@@ -339,23 +352,39 @@ def minhash_lsh_pairs_frame(cand: DataFrame) -> DataFrame:
     # side-table stage of a real dedup campaign; Spark's cache manager
     # dedupes by canonical plan, so repeated invocations share one
     # materialization.
-    sh = track_persist(_shingle_hashes(cand))
+    return _lsh_pairs(track_persist(_shingle_hashes(cand)))
+
+
+def _lsh_pairs(sh: DataFrame) -> DataFrame:
+    """(a_id, b_id, jaccard) banded-LSH pairs of a persisted
+    ``_shingle_hashes`` frame, in ONE join: no distinct and no join back
+    to the shingle frame, so the pair stage runs as few Spark jobs and
+    codegen stages as it can. The price is bytes: each band row carries
+    its document's shingle array, so a shuffled (not broadcast) bucket
+    join moves every array once per band on both sides."""
     bk = _band_keys_from(track_persist(_minhash_array(sh)))
     a, b = bk.alias("a"), bk.alias("b")
-    pairs = (
+    # a pair joins in every band whose key it shares; only the first such
+    # band keeps it, so each candidate comes out once, with no distinct
+    first_band = F.lit(True)
+    for i in range(_N_BANDS - 1):
+        first_band &= ~((F.col("a.band") > i) & (F.col("a.bks")[i] == F.col("b.bks")[i]))
+    # both sides carry their shingle arrays, so verification needs no join
+    # back to the shingle frame; it gates on the ROUNDED Jaccard (the
+    # oracle law)
+    return (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+            & (F.col("a.doc_id") < F.col("b.doc_id"))
+            & first_band,
         )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .distinct()
-    )
-    # verification gates on the ROUNDED Jaccard (the oracle law)
-    return (
-        _jaccard(pairs, sh)
-        .select("a_id", "b_id", F.round("j", 4).alias("jaccard"))
+        .select(
+            F.col("a.doc_id").alias("a_id"),
+            F.col("b.doc_id").alias("b_id"),
+            F.round(_jaccard_of("a.sh", "b.sh"), 4).alias("jaccard"),
+        )
         .filter(F.col("jaccard") >= 0.5)
     )
 
@@ -620,8 +649,14 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def jaccard_pairs_frame(cand: DataFrame) -> DataFrame:
     """The blocked-Jaccard pair operator over any (doc_id, text) frame —
     the plant-free production path the job CLI runs on real corpora."""
-    sh = track_persist(_shingle_array(cand))  # scanned 3x otherwise (keys + both verify sides)
-    # gates on the UNROUNDED Jaccard, reports it rounded (the oracle law)
+    # scanned 3x otherwise (keys + both verify sides)
+    return _blocked_jaccard_pairs(track_persist(_shingle_array(cand)))
+
+
+def _blocked_jaccard_pairs(sh: DataFrame) -> DataFrame:
+    """(a_id, b_id, jaccard) blocked pairs of a persisted ``_shingle_array``
+    frame; gates on the UNROUNDED Jaccard, reports it rounded (the oracle
+    law)."""
     return (
         _jaccard(_blocked_candidate_pairs(sh), sh)
         .filter(F.col("j") >= 0.3)
@@ -653,16 +688,17 @@ def connected_components(
     edges are still above ``local_edges`` and not at a fixpoint after
     ``max_rounds`` distributed rounds.
 
-    Local finish: the edge list is counted before the first round and
-    after each one. Whenever that count is <= ``local_edges``
-    (``_CC_LOCAL_EDGES`` by default), the checkpointed edges are fetched
-    with one ``toArrow()``, min-root union-find runs on the driver and the
-    labels come back as a DataFrame built from an Arrow table. A small
-    graph therefore costs one count and one fetch job instead of a count,
-    an anti-join probe and the AQE stage jobs of every round: an iterative
-    fixpoint over a few hundred edges pays for jobs, not bytes.
-    ``local_edges=0`` forces pure star contraction (an empty edge list is
-    still answered locally).
+    Local finish: the raw edges (self-loops dropped, repeats kept) are
+    first fetched with one bounded ``limit(local_edges + 1).toArrow()``.
+    If no more than ``local_edges`` (``_CC_LOCAL_EDGES`` by default) come
+    back, min-root union-find runs on them on the driver and the labels
+    come back as a DataFrame built from an Arrow table: a small graph
+    costs that one fetch job, with no distinct, count or checkpoint job.
+    Otherwise the distinct edges are checkpointed and counted, and the
+    rounds run until the count is under the budget, when the checkpointed
+    edges are fetched the same way. An iterative fixpoint over a few
+    hundred edges pays for jobs, not bytes. ``local_edges=0`` forces pure
+    star contraction (an empty edge list is still answered locally).
 
     Above the budget each round is two hash-aggregate+join passes over the
     edge list — no per-node neighbor materialization (no collect_list; hot
@@ -679,13 +715,17 @@ def connected_components(
     * a star set is a fixpoint; at convergence every edge is (node, root)
       with root = component minimum.
     """
-    E = (
-        edges.selectExpr("greatest(src, dst) AS u", "least(src, dst) AS v")
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)  # materialized by the count below —
-        # one job instead of an eager checkpoint job plus a count job
+    E = edges.selectExpr("greatest(src, dst) AS u", "least(src, dst) AS v").filter(
+        F.col("u") != F.col("v")
     )
+    # one bounded fetch of the raw edges: a graph with no more than the
+    # budget of them is finished right here (union-find ignores repeated
+    # edges), with no distinct, count or checkpoint job
+    t = E.limit(local_edges + 1).toArrow()
+    if t.num_rows <= local_edges:
+        return _union_find(t, E.sparkSession)
+    E = E.distinct().localCheckpoint(eager=False)  # materialized by the
+    # count below — one job instead of an eager checkpoint job plus a count
     n_e = E.count()
     rounds = 0
     while n_e > local_edges:
@@ -747,11 +787,15 @@ def _star_round(E: DataFrame) -> DataFrame:
 
 
 def _local_components(E: DataFrame) -> DataFrame:
-    """(node, label = component minimum) of a driver-sized (u, v) edge
-    list: one ``toArrow()`` fetch, min-root union-find with path halving,
-    and an Arrow-built DataFrame typed like ``u`` — no Row object, Python
-    worker or shuffle per edge."""
-    t = E.toArrow()
+    """(node, label) of a driver-sized checkpointed (u, v) edge list: one
+    ``toArrow()`` fetch, then ``_union_find``."""
+    return _union_find(E.toArrow(), E.sparkSession)
+
+
+def _union_find(t: pa.Table, spark: SparkSession) -> DataFrame:
+    """(node, label = component minimum) of a fetched (u, v) Arrow table:
+    min-root union-find with path halving, and an Arrow-built DataFrame
+    typed like ``u`` — no Row object, Python worker or shuffle per edge."""
     parent: dict = {}
 
     def find(x):
@@ -769,7 +813,7 @@ def _local_components(E: DataFrame) -> DataFrame:
             parent[ra] = rb
     nodes = list(parent)
     typ = t.schema.field("u").type
-    return E.sparkSession.createDataFrame(
+    return spark.createDataFrame(
         pa.table({
             "node": pa.array(nodes, typ),
             "label": pa.array([find(n) for n in nodes], typ),
@@ -902,22 +946,24 @@ def campaign_keep_frame(
     The pair stage is the only difference, so the two keep lists agree
     wherever the pair sets agree (pytest asserts exact agreement on the
     planted duplicates)."""
-    sources = {"jaccard": jaccard_pairs_frame, "minhash_lsh": minhash_lsh_pairs_frame}
+    sources = {"jaccard": (_shingle_array, _blocked_jaccard_pairs),
+               "minhash_lsh": (_shingle_hashes, _lsh_pairs)}
     try:
-        pair_fn = sources[pair_source]
+        shingles, pairs_of = sources[pair_source]
     except KeyError:
         raise ValueError(
             f"pair_source must be one of {sorted(sources)}, got {pair_source!r}"
         ) from None
-    pairs = pair_fn(docs).select(
-        F.col("a_id").alias("src"), F.col("b_id").alias("dst")
-    )
+    # the persisted shingle frame holds one row per input document, so the
+    # keep list reads its doc ids instead of scanning ``docs`` again
+    sh = track_persist(shingles(docs))
+    pairs = pairs_of(sh).select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
     labels = connected_components(pairs)
     drop = labels.filter(F.col("node") != F.col("label")).select(
         F.col("node").alias("doc_id")
     )
     return (
-        docs.select("doc_id").join(drop, "doc_id", "left_anti")
+        sh.select("doc_id").join(drop, "doc_id", "left_anti")
         .select(F.col("doc_id").cast("bigint").alias("doc_id"))
     )
 
@@ -1085,83 +1131,69 @@ _SUB_PASSAGE = (
 
 
 def _sub_word_arrays(docs: DataFrame) -> DataFrame:
-    """(doc_id, w: array<string>) — PERSISTED. The gram builder and the
-    kept-word rebuild both index ``w`` inside higher-order-function
-    lambdas; without the persist CollapseProject inlines the ``split``
-    under every lambda element evaluation (the r04 64x md5 trap —
-    CLAUDE.md 'alias-in-lambda inlining')."""
-    return track_persist(
-        docs.select("doc_id", F.split("text", " ").alias("w"))
-    )
+    """(doc_id, w: array<string>) — each document's ASCII-space word
+    array."""
+    return docs.select("doc_id", F.split("text", " ").alias("w"))
 
 
 def _sub_gram_occurrences(words: DataFrame) -> DataFrame:
-    """(doc_id, pos, gk, packed) — every _SUB_W-word window of every
-    document, keyed by md5 of the space-joined window (16-byte join keys,
-    same skew hardening as sentence dedup)."""
-    return words.select(
+    """(doc_id, w, pos, gk, packed) — every document with one row per
+    _SUB_W-word window start, the window keyed by md5 of its space-joined
+    words (16-byte join keys, same skew hardening as sentence dedup). A
+    document shorter than _SUB_W words keeps one row with a NULL ``pos``
+    (``sequence(1, 0)`` would descend). Plain column expressions, no
+    lambda, so the stage compiles into one codegen class; ``gk`` is
+    non-NULL by construction (a short document's md5 of '' matches no
+    window of 8 words), so no inferred ``isnotnull`` filter hashes each
+    window a second time."""
+    starts = F.when(
+        F.size("w") >= _SUB_W, F.sequence(F.lit(1), F.size("w") - (_SUB_W - 1))
+    )
+    window = F.array_join(F.slice("w", "pos", F.lit(_SUB_W)), " ")
+    return words.select("doc_id", "w", F.explode_outer(starts).alias("pos")).select(
         "doc_id",
-        F.explode(
-            F.expr(
-                f"CASE WHEN size(w) >= {_SUB_W} THEN "
-                f"transform(sequence(1, size(w) - {_SUB_W} + 1), "
-                f"i -> named_struct('pos', i, "
-                f"'gk', md5(array_join(slice(w, i, {_SUB_W}), ' ')))) "
-                "ELSE cast(array() as array<struct<pos:int,gk:string>>) END"
-            )
-        ).alias("o"),
-    ).select(
-        "doc_id",
-        F.col("o.pos").alias("pos"),
-        F.col("o.gk").alias("gk"),
-        (F.col("doc_id") * F.lit(_SUB_STRIDE) + F.col("o.pos")).alias("packed"),
+        "w",
+        "pos",
+        F.md5(F.coalesce(window, F.lit(""))).alias("gk"),
+        (F.col("doc_id") * F.lit(_SUB_STRIDE) + F.col("pos")).alias("packed"),
     )
 
 
-def _sub_covered(words: DataFrame) -> DataFrame:
-    """(doc_id, cov: array<int>) — word positions covered by a duplicated
+def _sub_kept(words: DataFrame) -> DataFrame:
+    """(doc_id, w, cov2, kept) — each document's word array (from a
+    ``_sub_word_arrays`` frame), the positions covered by a duplicated
     window occurrence that is NOT the corpus-wide canonical (packed-order
-    first) copy. Shape: one gk-keyed aggregate (map-side combine), one
-    gk equi-join, one per-doc regroup — no windows, no collect."""
-    occ = _sub_gram_occurrences(words)
-    freq = occ.groupBy("gk").agg(
-        F.count("*").alias("n"), F.min("packed").alias("first_packed")
-    )
-    dup = occ.join(freq, "gk").filter(
-        (F.col("n") > 1) & (F.col("packed") != F.col("first_packed"))
-    )
-    return (
-        dup.select(
-            "doc_id",
-            F.explode(F.expr(f"sequence(pos, pos + {_SUB_W} - 1)")).alias("p"),
-        )
-        .distinct()
-        .groupBy("doc_id")
-        .agg(F.collect_set("p").alias("cov"))
-    )
-
-
-def _sub_kept(docs: DataFrame) -> DataFrame:
-    """(doc_id, w, cov2, kept) — each document's word array, its covered
-    positions (``cov2``, empty when none) and its surviving text: the
+    first) copy (``cov2``, empty when none), and its surviving text: the
     words at uncovered positions, rejoined in order. The one rebuild
-    behind the scan query and the production cleaner."""
-    words = _sub_word_arrays(docs)
+    behind the scan query and the production cleaner.
+
+    Shape: the persisted word frame is read twice. One gk-keyed aggregate
+    (map-side combine) counts each window; one gk equi-join marks every
+    occurrence against it; one per-doc aggregate collects the covered
+    positions, with each document's words as part of its key — no
+    windows, no join back to the words."""
+    words = track_persist(words)
+    occ = _sub_gram_occurrences(words)
+    freq = (
+        occ.filter(F.col("pos").isNotNull())
+        .groupBy("gk")
+        .agg(F.count("*").alias("n"), F.min("packed").alias("first_packed"))
+        .filter(F.col("n") > 1)
+    )
+    covered = F.when(
+        F.col("packed") != F.col("first_packed"),
+        F.sequence("pos", F.col("pos") + (_SUB_W - 1)),
+    )
     return (
-        words.join(_sub_covered(words), "doc_id", "left")
-        .select(
-            "doc_id",
-            "w",
-            F.coalesce(F.col("cov"), F.expr("cast(array() as array<int>)"))
-            .alias("cov2"),
-        )
+        occ.join(freq, "gk", "left")
+        .select("doc_id", "w", F.explode_outer(covered).alias("p"))
+        .groupBy("doc_id", "w")
+        .agg(F.collect_set("p").alias("cov2"))
         .select(
             "doc_id", "w", "cov2",
-            F.array_join(F.expr(
-                "transform(filter(transform(sequence(1, size(w)), "
-                "i -> named_struct('i', i, 'wd', w[i - 1])), "
-                "s -> NOT array_contains(cov2, s.i)), s -> s.wd)"
-            ), " ").alias("kept"),
+            F.array_join(
+                F.expr("filter(w, (wd, i) -> NOT array_contains(cov2, i + 1))"), " "
+            ).alias("kept"),
         )
     )
 
@@ -1176,14 +1208,16 @@ def substring_dedup_frame(docs: DataFrame) -> DataFrame:
     are rejoined in order. Returns (doc_id, text). Shipped in the job CLI
     as ``--substring-dedup``.
 
-    100 TB shape: the gram aggregate and the per-doc regroups shuffle on
-    md5 window keys / doc_id; the gram⋈freq equi-join inherits the
+    100 TB shape: the gram aggregate and the per-doc regroup shuffle on
+    md5 window keys / doc_id (the regroup moves each document's words
+    once, as a join back to the words would at that scale); the
+    gram⋈freq equi-join inherits the
     sentence-dedup skew note (global boilerplate = hottest keys; AQE
     skewJoin enabled in the job CLI). No collect, no global window;
     per-doc state is bounded by document length."""
-    return _sub_kept(docs.select("doc_id", F.trim("text").alias("text"))).select(
-        "doc_id", F.col("kept").alias("text")
-    )
+    return _sub_kept(
+        _sub_word_arrays(docs.select("doc_id", F.trim("text").alias("text")))
+    ).select("doc_id", F.col("kept").alias("text"))
 
 
 @query(
@@ -1241,11 +1275,9 @@ def dedup_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
     — a blank doc counts 1 empty word, registry docstring); md5 window
     keys; 2^32 packed (doc_id, pos) order; round(dup/total, 4) with
     float division on both engines."""
-    # the per-window md5 fingerprints pay for the spread (~2x at sf0.1);
-    # the cheap minhash/simhash signature builds do not and read unspread
-    d = spread(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    ).select("doc_id", F.trim("text").alias("text"))
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", F.trim("text").alias("text")
+    )
     planted = d.select(
         "doc_id",
         F.when(
@@ -1253,7 +1285,11 @@ def dedup_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat("text", F.lit(f" {_SUB_PASSAGE}")),
         ).otherwise(F.col("text")).alias("text"),
     )
-    return _sub_kept(planted).select(
+    # the per-window md5 fingerprints pay for the spread (~2x at sf0.1);
+    # the cheap minhash/simhash signature builds do not and read unspread.
+    # Spreading the word arrays, not the text, leaves the cached frame
+    # with no stage of its own between the exchange and the cache.
+    return _sub_kept(spread(_sub_word_arrays(planted))).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.size("w").cast("bigint").alias("n_words"),
         F.size("cov2").cast("bigint").alias("n_dup_words"),

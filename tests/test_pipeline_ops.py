@@ -1057,8 +1057,9 @@ class TestCCClusters:
 
     def test_local_finish_job_count(self, spark):
         """Per-round jobs must not come back unseen: under the edge budget the
-        400-edge path costs one count, one Arrow fetch and the collect (4 jobs
-        measured with AQE on); pure star contraction pays for every round."""
+        400-edge path costs at most 4 jobs (one bounded Arrow fetch since it
+        skips the count; tests/test_plans.py pins that); pure star
+        contraction pays for every round."""
         from tesserocr_spark.queries.dedup import connected_components
 
         sc = spark.sparkContext

@@ -739,6 +739,54 @@ class TestContainerParserProperties:
         intact = out[out.doc_id == 0].drop(columns="doc_id")
         assert (intact.values != 0).any(axis=1).all()
 
+    @pytest.mark.parametrize("codec", ["bmp", "mp4"])
+    def test_parse_only_header_every_bitflip_and_truncation_keeps_law(self, codec):
+        """Exhaustive hostile-bytes sweep of the two parse-only containers:
+        every prefix truncation and every single-bit flip of one small
+        fixture. The parser never raises, each payload parses in
+        milliseconds, and any header it accepts keeps the parser's law
+        (BMP: positive bounded geometry, a carried bit depth and a pixel
+        array inside the buffer; MP4: bounded dimensions, at least one
+        track and a timescale); ``decode_media`` still returns one row."""
+        import struct
+        import time
+
+        from tesserocr_spark import multimodal as mm
+
+        parse, good = {
+            "bmp": (mm.parse_bmp, mm.make_bmp(5, 3, 24, 7)),
+            "mp4": (mm.parse_mp4, mm.make_mp4(8, 4, 90000, 7, 2)),
+        }[codec]
+
+        def law(v: bytes, m: dict) -> bool:
+            common = (m["format"] == codec and m["n_bytes"] == len(v)
+                      and 0 <= m["width"] <= 1 << 20 and 0 <= m["height"] <= 1 << 20)
+            if codec == "mp4":
+                return (common and m["bpp"] == 0 and m["n_channels"] >= 1
+                        and m["sample_rate"] is not None and m["n_frames"] is not None)
+            stride = ((m["width"] * m["bpp"] + 31) // 32) * 4
+            pixel_off = struct.unpack_from("<I", v, 10)[0]
+            return (common and m["width"] > 0 and m["height"] > 0
+                    and m["bpp"] in (1, 4, 8, 16, 24, 32)
+                    and m["n_channels"] == (3 if m["bpp"] >= 16 else 1)
+                    and m["n_frames"] == 1
+                    and pixel_off + stride * m["height"] <= len(v))
+
+        assert law(good, parse(good))
+        variants = [good[:k] for k in range(len(good))]
+        for bit in range(8 * len(good)):
+            flipped = bytearray(good)
+            flipped[bit // 8] ^= 1 << (bit % 8)
+            variants.append(bytes(flipped))
+        slowest = 0.0
+        for v in variants:
+            t0 = time.perf_counter()
+            m = parse(v)
+            slowest = max(slowest, time.perf_counter() - t0)
+            assert m is None or law(v, m), (v, m)
+            assert mm.decode_media(v)["n_bytes"] == len(v)
+        assert slowest < 0.05, slowest
+
     @given(
         w=st.integers(min_value=1, max_value=40),
         h=st.integers(min_value=1, max_value=24),

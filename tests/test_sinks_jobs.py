@@ -380,3 +380,22 @@ class TestJobs:
         rem = remaining_pages(pages.drop("bucket"), f"{base}.lineage", n_buckets=8)
         assert rem.count() == pages.filter(F.col("bucket") >= 4).count()
         assert rem.filter(F.col("bucket") < 4).count() == 0
+
+    def test_resumed_run_renders_what_it_extracted(self, spark, tmp_path):
+        """A resumed run writes its renderer outputs. The lineage append
+        used to make Spark recompute the persisted docs (then a left-anti
+        join against the lineage path) as empty, so out.txt and out.hocr
+        came out with no rows after a partial resume."""
+        base = str(tmp_path / "resumed")
+        pages = with_bucket(synthetic_pages(spark, 60), 8)
+        process_pages(pages.filter(F.col("bucket") < 4).drop("bucket"), base, n_buckets=8)
+        cfg = ExtractorConfig(variables={"tessedit_create_hocr": "1"})
+        res = process_pages(pages.drop("bucket"), base, cfg, n_buckets=8)
+        want = sorted(r.url for r in pages.filter(F.col("bucket") >= 4).collect())
+        assert res["n_docs"] == len(want) > 0
+        assert res["skipped_buckets"] == 4
+        txt = [r.value.split("\t", 1)[0]
+               for r in spark.read.text(res["renderers"]["txt"]).collect()]
+        hocr = [r.url for r in spark.read.json(res["renderers"]["hocr"]).collect()]
+        assert sorted(txt) == want
+        assert sorted(hocr) == want
